@@ -1589,10 +1589,10 @@ def q_fx_corr_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming correlation pipeline), gated end-to-end through the
     driver's correctness check rather than a pytest claim.
 
-    Building this query RUNS the stream and the store resolve probes
-    the marker set (laziness-guard exempt); the declared result is the
-    resolved snapshot — a pruned parquet scan plus one broadcast
-    marker join."""
+    Building this query RUNS the stream (laziness-guard exempt); the
+    declared result is the resolved snapshot — each window's latest
+    claim, kept by one window over a pruned parquet scan (a broadcast
+    claim join on stores over 1 MiB)."""
     import os
     import shutil
     import tempfile

@@ -15,24 +15,19 @@ standard production pattern for "aggregate of an aggregate" streams:
    BELOW the correlation aggregation, so the recompute's input is the
    touched windows' returns, never the whole store;
 3. results land log-structured: each batch writes its recomputed
-   windows to ONE ``batch_id``-keyed partition (overwrite → idempotent
-   retries). The batch's TOUCH CLAIM rides in the same write as marker
-   rows (``key1 IS NULL``, one per recomputed window):
-   :func:`read_streaming_correlations` resolves
-   latest-TOUCHING-batch-per-window from the markers, which is what
-   lets an empty recompute (late data dropped every pair of a window
-   below ``min_corr``) supersede the stale rows instead of silently
-   resurrecting them. A per-slide partitioned store was measured
-   15-19s/micro-batch at sf0.1 — ~1,100 tiny directories rewritten per
-   trigger, pure filesystem cost; the log layout writes one directory
-   and cut the trigger to a 3.5s median (5.3x). A first marker design
-   wrote a separate ``touched/`` sidecar per batch — measured at
-   ANOTHER ~3.5s/trigger (a whole extra Spark job + parquet commit for
-   a handful of longs); in-band markers put the claim in the write
-   that already happens, restoring the 3.7s median, and work on remote
-   stores where a driver-side sidecar listing would not.
-   :func:`compact_correlation_store` periodically folds the log into
-   one superseding batch so the read-time resolve stays bounded.
+   windows to ONE ``batch_id``-keyed partition of
+   ``{work_dir}/correlations`` (overwrite → idempotent retries). The
+   batch's claim on the windows it recomputed rides in the same write
+   as marker rows (``key1 IS NULL``, one per recomputed window), so an
+   empty recompute (late data dropped every pair of a window below
+   ``min_corr``) still supersedes the stale rows. A per-slide
+   partitioned store was measured at 15-19s/micro-batch at sf0.1
+   (~1,100 tiny directories rewritten per trigger); the log layout
+   writes one directory per trigger.
+   :func:`read_streaming_correlations` resolves the latest claim per
+   window (one scan and a window on a small store, a broadcast join of
+   claims on a large one); :func:`compact_correlation_store` folds the
+   log into one batch so that resolve stays small.
 
 At 100 TB the same shape holds: the recompute scans only the affected
 time range (min/max predicate reaches the parquet scan) and the pair
@@ -43,7 +38,7 @@ parquet here keeps the container dependency-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_timeseries_java_spark.operators import (
@@ -54,11 +49,29 @@ from data_timeseries_java_spark.streaming.candles_stream import (
     streaming_complete_candles,
     streaming_complete_candles_global,
 )
+from data_timeseries_java_spark.streaming.logstore import (
+    FOLD_OFFSET,
+    local_store_path,
+    swap_in_fold,
+)
 
 # Above this many touched windows, per-trigger membership filters use a
 # broadcast left-semi join instead of a literal IN — the list itself
 # stays a tiny driver-side long array either way.
 _IN_LITERAL_MAX = 10_000
+
+# Correlation stores up to this many file bytes resolve with a window,
+# larger ones with a broadcast claim join (read_streaming_correlations).
+_WINDOW_RESOLVE_MAX_BYTES = 1 << 20
+
+# Both stores' schemas, pinned so that no read infers one (a Spark job
+# over the store's footers). Marker rows in the correlation store are
+# null in every column but ``w_start_ms``; fold ids exceed 2**31, so
+# ``batch_id`` is a bigint.
+_RETURNS_SCHEMA = "key string, time timestamp, value double, batch_id bigint"
+_CORR_SCHEMA = ("window_start timestamp, window_end timestamp, key1 string, "
+                "key2 string, value double, x_count int, y_count int, "
+                "is_nan boolean, w_start_ms bigint, batch_id bigint")
 
 
 def _flat_candles_to_returns(candles: DataFrame) -> DataFrame:
@@ -111,8 +124,16 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
     ``_IN_LITERAL_MAX`` windows so the PLAN stays small either way —
     only the driver-side list (8 bytes/window) and the marker rows
     scale with the count.
+
+    ``config.include_underlying`` is refused: the store's reads pin one
+    schema (``_CORR_SCHEMA``), which has no ``x_values``/``y_values``
+    columns, so the reads and the compaction fold would drop them.
     """
     cfg = config or CorrelationConfig()
+    if cfg.include_underlying:
+        raise ValueError(
+            "streaming_correlations does not support include_underlying: "
+            "the correlation store has no x_values/y_values columns")
     returns_path = f"{work_dir}/returns"
     corr_path = f"{work_dir}/correlations"
     if universe is not None:
@@ -182,8 +203,7 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
                 F.broadcast(wins_df),
                 F.col("w_start_ms") == F.col("w_member_ms"), "left_semi")
 
-        all_rets = (spark.read
-                    .option("basePath", returns_path)
+        all_rets = (spark.read.schema(_RETURNS_SCHEMA)
                     .parquet(returns_path)
                     .drop("batch_id")
                     .where((F.col("time") >= F.timestamp_millis(F.lit(lo)))
@@ -202,17 +222,12 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
         corr = pairwise_correlations(in_affected, cfg, cache_input=False)
         affected = touched(corr.withColumn("w_start_ms",
                                            F.unix_millis("window_start")))
-        # Log-structured store: ONE directory per batch (vs one per
-        # touched slide — ~1,100 dirs/trigger measured at sf0.1, 15-19s
-        # of pure filesystem churn). Latest TOUCHING batch wins per
-        # window at read time (read_streaming_correlations) — the
-        # marker rows unioned below (key1 IS NULL, one per touched
-        # window) are the authority on which batch that is, so a
-        # recompute that emits ZERO rows for a window (late data pushed
-        # every pair under min_corr) still supersedes the stale rows.
-        # In-band markers, NOT a separate sidecar write: a second tiny
-        # parquet job per trigger measured ~3.5s of pure job/commit
-        # overhead at sf0.1 (doubling the trigger).
+        # One directory per batch. The marker rows unioned below
+        # (key1 IS NULL, one per touched window) are the batch's claim
+        # on its windows, so a recompute that emits ZERO rows for a
+        # window still supersedes the stale rows at read time. They
+        # ride in this write: a separate claim write per trigger
+        # measured ~3.5s of extra job/commit overhead at sf0.1.
         markers = (spark.createDataFrame([(int(w),) for w in wins],
                                          "w_start_ms bigint")
                    .select(*[F.col("w_start_ms") if f.name == "w_start_ms"
@@ -228,134 +243,111 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
             .start())
 
 
+def _resolve(spark: SparkSession, corr_path: str) -> DataFrame:
+    """Every row, marker rows included, of the batch holding the latest
+    claim on its window; ``batch_id`` dropped."""
+    store = spark.read.schema(_CORR_SCHEMA).parquet(corr_path)
+    claim = F.when(F.col("key1").isNull(),
+                   F.struct((F.col("batch_id") % FOLD_OFFSET).alias("seq"),
+                            "batch_id"))
+    # The files' byte total, from the listing the read already made:
+    # the statistic Spark's own broadcast threshold reads; no job runs.
+    size = store._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size <= _WINDOW_RESOLVE_MAX_BYTES:
+        return (store
+                .withColumn("_latest", F.max(claim).over(
+                    Window.partitionBy("w_start_ms"))["batch_id"])
+                .where(F.col("batch_id") == F.col("_latest"))
+                .drop("batch_id", "_latest"))
+    claims = (store.where(F.col("key1").isNull()).groupBy("w_start_ms")
+              .agg(F.max(claim)["batch_id"].alias("batch_id")))
+    return (store.join(F.broadcast(claims), ["w_start_ms", "batch_id"])
+            .select([c for c in store.columns if c != "batch_id"]))
+
+
 def read_streaming_correlations(spark: SparkSession,
                                 work_dir: str) -> DataFrame:
     """Resolve the log-structured correlation store to its current
-    snapshot: for each sliding window, the rows from the LATEST batch
-    that RECOMPUTED it (earlier batches' rows for that window are
-    superseded — a window's full result always comes from one batch).
+    snapshot: for each sliding window, the rows of the batch that last
+    RECOMPUTED it (a window's full result always comes from one batch).
 
-    "Recomputed" is decided by the batches' marker rows (``key1 IS
-    NULL``, one per window each batch touched — written in-band with
-    the batch's data), not by which batches happen to have data rows
-    for the window: a recompute that emitted zero pair rows (every pair
+    "Recomputed" is decided by the marker rows (``key1 IS NULL``, one
+    per window a batch claims), not by which batches have data rows for
+    the window: a recompute that emitted zero pair rows (every pair
     dropped below ``min_corr`` after late data) is an
-    empty-but-authoritative result, and resolving against data rows
-    alone would resurrect the superseded batch's stale rows — and
-    ``compact_correlation_store`` would then fold them into the
-    permanent snapshot.
+    empty-but-authoritative result that must hide the older rows.
 
-    The marker set is O(batches x windows-per-trigger) — broadcast into
-    the join, so the store side stays a single pruned parquet scan. On
-    Delta/Iceberg this read-time resolve disappears into
-    MERGE-maintained tables. Two legacy layouts still resolve: a
-    ``touched/`` parquet sidecar (the first marker design — an extra
-    ~3.5s write job per trigger, since removed), and marker-less
-    stores, which fall back to max-batch-per-window over the data rows
-    (documented min_corr staleness caveat applies there). A MIXED
-    store — a pre-migration run resumed under the in-band code, so the
-    sidecar covers old batches and in-band markers cover new ones — is
-    resolved by UNIONING both claim sources (max batch_id per window
-    across sidecar + markers); short-circuiting on sidecar presence
-    would silently drop every post-resume batch's rows and serve stale
-    superseded rows, and compaction would make that loss permanent.
+    Claims are ordered by ``(batch_id % FOLD_OFFSET, batch_id)``. A
+    stream batch ``b`` ranks ``(b, b)``; a fold written by
+    :func:`compact_correlation_store` at ``k * FOLD_OFFSET + m``, where
+    ``m`` is the newest stream batch it folded, outranks exactly the
+    batches it folded (and earlier folds of them) and no later batch.
+
+    Shape: the store is read once with a pinned schema, and its size
+    (the files' byte total, known from the listing) picks one of two
+    resolves. Up to ``_WINDOW_RESOLVE_MAX_BYTES`` (1 MiB), one window
+    partitioned by ``w_start_ms`` keeps the rows whose ``batch_id`` is
+    the window's latest claim: one scan, but the window shuffles and
+    sorts every row (only the columns the caller keeps), one task per
+    window. Above it, a broadcast join of per-window latest claims
+    against the data rows: the store is scanned twice, but only the
+    marker rows are shuffled, and the data side streams through the
+    join at full scan parallelism. On 4 vCPU (warm full-column reads,
+    window against join) the window wins below ~1 MB: 0.34 s against
+    0.60 s at 0.2 MB, 0.62 s against 0.78 s at 0.9 MB; the join wins
+    above: 1.03 s against 0.49 s at 5.7 MB, 4.6 s against 1.2 s at
+    35 MB (1000 instruments). fxbench ``fx_stream`` (a ~35 KB store)
+    read 0.67 s against 0.87 s. SCALE.md (Streaming state) has the
+    rest.
+
+    Compaction folds with the same resolve. On Delta/Iceberg this
+    resolve becomes a MERGE-maintained table.
     """
-    import os
-
-    corr_path = f"{work_dir}/correlations"
-    touched_path = f"{work_dir}/touched"
-    df = spark.read.option("basePath", corr_path).parquet(corr_path)
-    data = df.where(F.col("key1").isNotNull())
-    marks = df.where(F.col("key1").isNull()).select("w_start_ms", "batch_id")
-    if os.path.isdir(touched_path):          # legacy/mixed sidecar store
-        marks = marks.unionByName(
-            spark.read.option("basePath", touched_path)
-            .parquet(touched_path).select("w_start_ms", "batch_id"))
-    if marks.limit(1).count() == 0:          # pre-marker store
-        from pyspark.sql import Window
-        latest = F.max("batch_id").over(Window.partitionBy("w_start_ms"))
-        return (data.withColumn("_latest", latest)
-                .where(F.col("batch_id") == F.col("_latest"))
-                .drop("batch_id", "_latest"))
-    touched = (marks.groupBy("w_start_ms")
-               .agg(F.max("batch_id").alias("batch_id")))
-    return (data.join(F.broadcast(touched), ["w_start_ms", "batch_id"])
-            .select([c for c in df.columns if c != "batch_id"]))
+    return (_resolve(spark, f"{work_dir}/correlations")
+            .where(F.col("key1").isNotNull()))
 
 
 def compact_correlation_store(spark: SparkSession, work_dir: str) -> dict:
-    """Fold the log-structured correlation store to one superseding
-    batch: resolve the current snapshot (latest batch per window), write
-    it as a single new ``batch_id`` partition numbered above every
-    existing one, then drop the superseded batch directories. Bounds the
-    read-time resolve cost after long runs — the maintenance pass that
-    pairs with ``sources.writers.compact_parquet`` the way minor
-    compaction pairs with an LSM tree.
-
-    Readers racing the final directory removal on plain parquet may see
-    a batch twice; ``read_streaming_correlations`` is idempotent to that
-    (latest-batch filter), so the only hazard window is a reader listing
-    directories mid-delete — on an ACID table format this whole function
-    is a MERGE/OPTIMIZE call instead. Returns {batches_before,
+    """Fold the log-structured correlation store into one batch: the
+    resolved snapshot plus the latest claim's marker row for every
+    window, so a window whose latest recompute was empty stays empty.
+    Bounds the read-time resolve after long runs, the way minor
+    compaction bounds an LSM tree. Returns {batches_before,
     batches_after, rows} for observability.
 
-    Touch claims are folded alongside: the compacted batch carries one
-    marker row for every window any folded batch touched, so a window
-    whose latest state was an empty recompute stays empty after
-    compaction (its stale rows are physically gone and its touch claim
-    survives). A legacy ``touched/`` sidecar, if present, is folded
-    into the compacted batch's markers and removed — compaction
-    migrates old stores to the in-band layout.
+    The fold's id is ``top + FOLD_OFFSET``, where ``top`` is the
+    highest-ranked batch (see :func:`read_streaming_correlations`).
+    The stream's next batch id is its own counter + 1, far below
+    ``FOLD_OFFSET``, so the stream's overwrite-mode write never
+    replaces a fold, and that next batch outranks the fold. The fold is
+    staged in a dot-dir (invisible to readers) and renamed into place
+    before any removal (``logstore.swap_in_fold``). A crash after the
+    rename leaves the fold beside the batches it folded; the fold
+    outranks them, so the snapshot has no duplicate rows, and the next
+    compaction removes them. Readers racing the removals on plain
+    parquet may fail to list a directory; run compaction between
+    stream runs and reads.
 
-    Local filesystem only: the directory shuffle goes through
-    ``os``/``shutil``, which would silently no-op (or worse) on an
-    ``hdfs://``/``s3a://`` store that the rest of the pipeline reaches
-    through Spark writers — refuse URI schemes loudly. On a real
-    cluster this maintenance pass belongs to the table format.
+    Local filesystem only: the rename and removals go through
+    ``os``/``shutil``, so remote URI schemes are refused; on a real
+    cluster this pass belongs to the table format (OPTIMIZE).
     """
     import os
-    import re
-    import shutil
 
-    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", work_dir)
-    if m and m.group(1) != "file":
-        raise ValueError(
-            f"compact_correlation_store only supports local paths; got "
-            f"scheme {m.group(1)!r} — use the table format's own "
-            f"compaction (OPTIMIZE/rewrite_data_files) on remote stores")
-    local_dir = work_dir[len("file://"):] if m else work_dir
-    corr_path = f"{local_dir}/correlations"
-    touched_path = f"{local_dir}/touched"
+    from pyspark.sql import Observation
+
+    corr_path = local_store_path(work_dir, "correlations",
+                                 "compact_correlation_store")
     batches = sorted(d for d in os.listdir(corr_path)
                      if d.startswith("batch_id="))
-    # No batches => nothing to fold (even if a legacy touched/ sidecar
-    # is present — reading the empty correlations dir would fail with
-    # unable-to-infer-schema); one batch with no sidecar is already
-    # compact.
-    if not batches or (len(batches) == 1 and not os.path.isdir(touched_path)):
+    if len(batches) <= 1:                    # nothing to fold
         return {"batches_before": len(batches), "batches_after": len(batches),
                 "rows": None}
-    snapshot = read_streaming_correlations(spark, local_dir)
-    store = (spark.read.option("basePath", corr_path).parquet(corr_path))
-    all_touched = (store.where(F.col("key1").isNull())
-                   .select("w_start_ms"))
-    if os.path.isdir(touched_path):          # fold the legacy sidecar in
-        all_touched = all_touched.unionByName(
-            spark.read.option("basePath", touched_path)
-            .parquet(touched_path).select("w_start_ms"))
-    all_touched = all_touched.distinct()
-    dtypes = {f.name: f.dataType for f in snapshot.schema.fields}
-    markers = all_touched.select(
-        *[F.col("w_start_ms") if c == "w_start_ms"
-          else F.lit(None).cast(dtypes[c]).alias(c)
-          for c in snapshot.columns])
-    new_id = max((int(b.split("=", 1)[1]) for b in batches), default=0) + 1
-    out_dir = f"{corr_path}/batch_id={new_id}"
-    snapshot.unionByName(markers).write.mode("overwrite").parquet(out_dir)
-    rows = (spark.read.parquet(out_dir)
-            .where(F.col("key1").isNotNull()).count())
-    if os.path.isdir(touched_path):
-        shutil.rmtree(touched_path, ignore_errors=True)
-    for b in batches:
-        shutil.rmtree(os.path.join(corr_path, b), ignore_errors=True)
-    return {"batches_before": len(batches), "batches_after": 1, "rows": rows}
+    top = max((int(b.split("=", 1)[1]) for b in batches),
+              key=lambda i: (i % FOLD_OFFSET, i))
+    rows = Observation("fold")
+    folded = _resolve(spark, corr_path).observe(
+        rows, F.count("key1").alias("rows"))
+    swap_in_fold(folded, corr_path, top + FOLD_OFFSET, batches)
+    return {"batches_before": len(batches), "batches_after": 1,
+            "rows": rows.get["rows"]}

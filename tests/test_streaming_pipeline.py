@@ -138,6 +138,23 @@ _CORR_SCHEMA = ("window_start timestamp, window_end timestamp, "
                 "w_start_ms long")
 
 
+def _write_batch(spark, d, bid, rows, wins):
+    """One batch as ``process_batch`` writes it: pair rows plus a marker
+    row (key1 IS NULL) per window the batch recomputed, in overwrite
+    mode."""
+    marks = [(None, None, None, None, None, None, None, None, w)
+             for w in wins]
+    spark.createDataFrame(rows + marks, _CORR_SCHEMA).write.mode(
+        "overwrite").parquet(f"{d}/correlations/batch_id={bid}")
+
+
+def _pair(w, value):
+    from datetime import datetime, timezone
+
+    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    return (t, t, "A", "B", value, 5, 5, False, w)
+
+
 def test_empty_recompute_supersedes_stale_rows(spark):
     """A batch that RECOMPUTES a window but emits zero pair rows (late
     data pushed every pair under min_corr) must supersede the previous
@@ -145,26 +162,17 @@ def test_empty_recompute_supersedes_stale_rows(spark):
     presence, decide the latest batch per window. Without markers the
     resolve served the stale rows forever and compaction made them
     permanent."""
-    from datetime import datetime, timezone
-
     from data_timeseries_java_spark.streaming.pipeline import (
         compact_correlation_store,
     )
 
-    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
     d = tempfile.mkdtemp(prefix="spipe_tomb_")
     try:
-        def write_batch(bid, rows, wins):
-            marks = [(None, None, None, None, None, None, None, None, w)
-                     for w in wins]
-            spark.createDataFrame(rows + marks, _CORR_SCHEMA).write.mode(
-                "overwrite").parquet(f"{d}/correlations/batch_id={bid}")
-
         # batch 0: windows 1000 and 2000 each have one pair row
-        row = lambda w: (t, t, "A", "B", 0.9, 5, 5, False, w)
-        write_batch(0, [row(1000), row(2000)], [1000, 2000])
+        _write_batch(spark, d, 0, [_pair(1000, 0.9), _pair(2000, 0.9)],
+                     [1000, 2000])
         # batch 1: recomputes window 1000, result is EMPTY (tombstone)
-        write_batch(1, [], [1000])
+        _write_batch(spark, d, 1, [], [1000])
 
         got = read_streaming_correlations(spark, d)
         assert {r.w_start_ms for r in got.collect()} == {2000}
@@ -181,112 +189,149 @@ def test_empty_recompute_supersedes_stale_rows(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_legacy_sidecar_store_resolves_and_migrates(spark):
-    """Stores written by the interim touched/-sidecar layout still
-    resolve (sidecar authority), and compaction migrates them to the
-    in-band marker layout, removing the sidecar directory."""
-    import os
-    from datetime import datetime, timezone
+def _three_batches(spark, d):
+    """Batches 0-2, each recomputing some windows of the one before."""
+    _write_batch(spark, d, 0, [_pair(1000, 0.1), _pair(2000, 0.2)],
+                 [1000, 2000])
+    _write_batch(spark, d, 1, [_pair(2000, 0.3), _pair(3000, 0.4)],
+                 [2000, 3000])
+    _write_batch(spark, d, 2, [_pair(3000, 0.5)], [3000])
 
+
+@pytest.fixture(params=["window", "join"])
+def resolve_shape(request, monkeypatch):
+    """Run the test under both resolve shapes: the window (stores up to
+    ``_WINDOW_RESOLVE_MAX_BYTES``) and the broadcast join (above it)."""
+    from data_timeseries_java_spark.streaming import pipeline
+
+    if request.param == "join":
+        monkeypatch.setattr(pipeline, "_WINDOW_RESOLVE_MAX_BYTES", -1)
+    return request.param
+
+
+def _snapshot(spark, d):
+    return sorted((r.w_start_ms, r.value)
+                  for r in read_streaming_correlations(spark, d).collect())
+
+
+def _batch_dirs(d):
+    import os
+
+    return sorted(x for x in os.listdir(f"{d}/correlations")
+                  if x.startswith("batch_id="))
+
+
+# Batch 3, the stream's next micro-batch after batches 0-2: it recomputes
+# window 3000 and opens window 4000.
+_AFTER_BATCH_3 = [(1000, 0.1), (2000, 0.3), (3000, 0.6), (4000, 0.7)]
+
+
+def _write_batch_3(spark, d):
+    _write_batch(spark, d, 3, [_pair(3000, 0.6), _pair(4000, 0.7)],
+                 [3000, 4000])
+
+
+def test_compact_then_next_stream_batch_keeps_folded_windows(
+        spark, resolve_shape):
+    """The stream numbers its next micro-batch from its own checkpoint
+    (here 3) and writes it in overwrite mode. A fold written at
+    max(batch_id) + 1 had that same id, so the next micro-batch deleted
+    it and every folded window with it. The fold must survive, and the
+    new batch must outrank it."""
     from data_timeseries_java_spark.streaming.pipeline import (
         compact_correlation_store,
     )
 
-    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
-    d = tempfile.mkdtemp(prefix="spipe_legacy_")
+    d = tempfile.mkdtemp(prefix="spipe_foldid_")
     try:
-        def write_batch(bid, rows, wins):
-            spark.createDataFrame(rows, _CORR_SCHEMA).write.mode(
-                "overwrite").parquet(f"{d}/correlations/batch_id={bid}")
-            spark.createDataFrame([(w,) for w in wins],
-                                  "w_start_ms long").write.mode(
-                "overwrite").parquet(f"{d}/touched/batch_id={bid}")
-
-        row = lambda w: (t, t, "A", "B", 0.9, 5, 5, False, w)
-        write_batch(0, [row(1000), row(2000)], [1000, 2000])
-        write_batch(1, [], [1000])           # sidecar-only tombstone
-
-        got = read_streaming_correlations(spark, d)
-        assert {r.w_start_ms for r in got.collect()} == {2000}
-
+        _three_batches(spark, d)
+        assert compact_correlation_store(spark, d)["batches_after"] == 1
+        _write_batch_3(spark, d)
+        assert _snapshot(spark, d) == _AFTER_BATCH_3
+        # the next compaction folds batch 3 over the earlier fold
         stats = compact_correlation_store(spark, d)
-        assert stats["batches_after"] == 1 and stats["rows"] == 1
-        assert not os.path.isdir(f"{d}/touched")   # migrated
-        after = read_streaming_correlations(spark, d)
-        assert {r.w_start_ms for r in after.collect()} == {2000}
-        marks = (spark.read.option("basePath", f"{d}/correlations")
-                 .parquet(f"{d}/correlations").where("key1 IS NULL"))
-        assert {r.w_start_ms for r in marks.collect()} == {1000, 2000}
+        assert stats["batches_before"] == 2 and stats["rows"] == 4
+        assert len(_batch_dirs(d)) == 1
+        assert _snapshot(spark, d) == _AFTER_BATCH_3
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_mixed_sidecar_and_inband_store_resolves(spark):
-    """A pre-migration store (touched/ sidecar) RESUMED under the
-    in-band-marker code: old batches' claims live only in the sidecar,
-    new batches' claims only in-band. The resolve must union both claim
-    sources (max batch_id per window across sidecar + markers) — a
-    sidecar-presence short-circuit would drop every post-resume batch's
-    rows and serve the superseded rows, and compaction would then make
-    the loss permanent."""
-    import os
-    from datetime import datetime, timezone
-
+def test_compaction_crash_after_fold_rename_leaves_no_duplicates(
+        spark, monkeypatch, resolve_shape):
+    """Fault injection: compaction renames its fold into place and then
+    dies before removing any folded batch. The snapshot must show each
+    window once, from the fold. The recovery (the next compaction) and
+    the stream's next micro-batch must then still resolve to the newest
+    recompute of every window."""
     from data_timeseries_java_spark.streaming.pipeline import (
         compact_correlation_store,
     )
 
-    t = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
-    d = tempfile.mkdtemp(prefix="spipe_mixed_")
+    d = tempfile.mkdtemp(prefix="spipe_crash_")
     try:
-        row = lambda w, c: (t, t, "A", "B", c, 5, 5, False, w)
-        # batch 0: legacy layout — data rows + sidecar claim, no markers
-        spark.createDataFrame([row(1000, 0.5), row(2000, 0.5)],
-                              _CORR_SCHEMA).write.mode(
-            "overwrite").parquet(f"{d}/correlations/batch_id=0")
-        spark.createDataFrame([(1000,), (2000,)],
-                              "w_start_ms long").write.mode(
-            "overwrite").parquet(f"{d}/touched/batch_id=0")
-        # batch 1: post-resume layout — in-band markers, sidecar untouched.
-        # Recomputes window 1000 with a NEW value and tombstones 2000.
-        marks = [(None, None, None, None, None, None, None, None, w)
-                 for w in (1000, 2000)]
-        spark.createDataFrame([row(1000, 0.9)] + marks,
-                              _CORR_SCHEMA).write.mode(
-            "overwrite").parquet(f"{d}/correlations/batch_id=1")
-
-        got = {(r.w_start_ms, r.value)
-               for r in read_streaming_correlations(spark, d).collect()}
-        assert got == {(1000, 0.9)}
+        _three_batches(spark, d)
+        before = _snapshot(spark, d)
+        assert before == [(1000, 0.1), (2000, 0.3), (3000, 0.5)]
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "rmtree", lambda *a, **k: None)
+            compact_correlation_store(spark, d)
+        assert len(_batch_dirs(d)) == 4       # the fold beside batches 0-2
+        assert _snapshot(spark, d) == before
 
         stats = compact_correlation_store(spark, d)
-        assert stats["batches_after"] == 1 and stats["rows"] == 1
-        assert not os.path.isdir(f"{d}/touched")
-        after = {(r.w_start_ms, r.value)
-                 for r in read_streaming_correlations(spark, d).collect()}
-        assert after == {(1000, 0.9)}
+        assert stats["batches_before"] == 4 and stats["batches_after"] == 1
+        assert _snapshot(spark, d) == before
+        _write_batch_3(spark, d)
+        assert _snapshot(spark, d) == _AFTER_BATCH_3
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_compact_empty_store_with_sidecar_is_noop(spark):
-    """Zero batch directories but a touched/ sidecar present: compaction
-    must early-return instead of failing on the unreadable empty
-    correlations directory."""
-    import os
+def test_read_resolve_shape_runs_no_probe_jobs(spark, resolve_shape):
+    """Building the snapshot DataFrame runs no Spark job (no schema
+    inference, no emptiness probe, no size probe). Counting it scans
+    the store once on a small store, where the latest claim per window
+    comes from one window over that scan, and twice when the store is
+    over the window's size limit, where a marker scan is joined back."""
+    import re
 
-    from data_timeseries_java_spark.streaming.pipeline import (
-        compact_correlation_store,
-    )
-
-    d = tempfile.mkdtemp(prefix="spipe_empty_")
+    d = tempfile.mkdtemp(prefix="spipe_shape_")
     try:
-        os.makedirs(f"{d}/correlations")
-        spark.createDataFrame([(1000,)], "w_start_ms long").write.mode(
-            "overwrite").parquet(f"{d}/touched/batch_id=0")
-        stats = compact_correlation_store(spark, d)
-        assert stats == {"batches_before": 0, "batches_after": 0,
-                         "rows": None}
+        _three_batches(spark, d)
+        _write_batch(spark, d, 3, [], [1000])      # empty recompute
+        sc = spark.sparkContext
+        group = "resolve-shape-probe"
+        sc.setJobGroup(group, "assert no jobs while building the resolve")
+        try:
+            snap = read_streaming_correlations(spark, d)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+        counted = snap.groupBy().count()
+        assert counted.collect()[0][0] == 2
+        plan = counted._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        scans = re.findall(r"FileScan parquet .*", final)
+        assert len(scans) == {"window": 1, "join": 2}[resolve_shape], final
+        assert all(f"{d}/correlations]" in scan for scan in scans)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_streaming_rejects_include_underlying(spark):
+    """The store's pinned schema has no x_values/y_values, so a stream
+    that would write them is refused up front instead of losing them at
+    read or compaction time."""
+    d = tempfile.mkdtemp(prefix="spipe_")
+    try:
+        src = spark.readStream.schema(TICK_SCHEMA).parquet(d)
+        cfg = CorrelationConfig(window="600 seconds", slide="300 seconds",
+                                include_underlying=True)
+        with pytest.raises(ValueError, match="include_underlying"):
+            streaming_correlations(spark, src, f"{d}/out", config=cfg)
+        assert spark.streams.active == []
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
