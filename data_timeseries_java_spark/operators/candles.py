@@ -27,6 +27,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# The type of _tick_struct(), and so of every candle's price fields.
+_TICK_TYPE = "struct<time:timestamp,bid:double,ask:double,is_live:boolean>"
+
+
 def _tick_struct() -> "F.Column":
     return F.struct(
         F.col("event_time").alias("time"),
@@ -118,7 +122,8 @@ def ohlc_candles(ticks: DataFrame, resolution: str = "120 seconds") -> DataFrame
     )
 
 
-def complete_candles(candles: DataFrame) -> DataFrame:
+def complete_candles(candles: DataFrame,
+                     with_close_live: bool = False) -> DataFrame:
     """Carry-forward completion — A4 (SURVEY.md §2.3),
     ``CompleteTimeSeriesAggCombiner.java:47-227`` +
     ``TimeseriesUtils.addTSOpenValue:98-128`` — as two window passes over
@@ -136,6 +141,12 @@ def complete_candles(candles: DataFrame) -> DataFrame:
     The reference's accumulating-panes machinery (W3/W4/W5) and its inert
     compaction bug (§2.9.2) have no Spark counterpart — `lag` needs no
     state emulation in batch.
+
+    ``with_close_live=True`` adds ``close_live``: whether the candle's
+    (filled) close is a live close or carried from one, false only
+    while its key has had no live candle. The streaming pipeline stores
+    it with the close to seed the next micro-batch's back-fill
+    (``streaming/pipeline.py``).
     """
     wk = Window.partitionBy("key").orderBy("window_start")
     prev_all = wk.rowsBetween(Window.unboundedPreceding, -1)
@@ -164,6 +175,8 @@ def complete_candles(candles: DataFrame) -> DataFrame:
         F.when(F.col("is_live"), F.col("min_bid")).otherwise(filled_close).alias("min_bid"),
         F.when(F.col("is_live"), F.col("max_bid")).otherwise(filled_close).alias("max_bid"),
         "is_live",
+        *([(F.col("is_live") | last_live_close.isNotNull()).alias("close_live")]
+          if with_close_live else []),
     )
     opened = filled.withColumn(
         "open", F.coalesce(F.lag("close").over(wk), F.col("close"))
@@ -171,6 +184,7 @@ def complete_candles(candles: DataFrame) -> DataFrame:
     return opened.select(
         "key", "window_start", "window_end",
         "open", "close", "min_ask", "max_ask", "min_bid", "max_bid", "is_live",
+        *(["close_live"] if with_close_live else []),
     )
 
 
@@ -191,17 +205,24 @@ def candles_pipeline(ticks: DataFrame, instruments: DataFrame,
     expected = windows.crossJoin(F.broadcast(instruments))
     missing = expected.join(live.select("key", "window_start"),
                             ["key", "window_start"], "left_anti")
+    return complete_candles(live.unionByName(gap_candles(missing)))
+
+
+def gap_candles(missing: DataFrame) -> DataFrame:
+    """Gap candles for (key, window_start, window_end) rows that saw no
+    tick: the :func:`ohlc_candles` schema, every price field the
+    :func:`gap_fill` row (0.0 prices at ``window_end - 1ms``,
+    ``is_live=false``), which :func:`complete_candles` back-fills."""
     gap_tick = F.struct(
         (F.col("window_end") - F.expr("INTERVAL 1 MILLISECOND")).alias("time"),
         F.lit(0.0).alias("bid"), F.lit(0.0).alias("ask"),
         F.lit(False).alias("is_live"),
     )
-    gap_candles = missing.select(
+    return missing.select(
         "key", "window_start", "window_end",
-        F.lit(None).cast(live.schema["open"].dataType).alias("open"),
+        F.lit(None).cast(_TICK_TYPE).alias("open"),
         gap_tick.alias("close"),
         gap_tick.alias("min_ask"), gap_tick.alias("max_ask"),
         gap_tick.alias("min_bid"), gap_tick.alias("max_bid"),
         F.lit(False).alias("is_live"),
     )
-    return complete_candles(live.unionByName(gap_candles))

@@ -54,7 +54,8 @@ def cusum_changepoints(points: DataFrame, key_col: str = "key",
         "alarm_neg", F.col("cusum_neg") > threshold)
 
 
-def log_returns(candles: DataFrame) -> DataFrame:
+def log_returns(candles: DataFrame,
+                keep_undefined: bool = False) -> DataFrame:
     """Candles → (key, time, value) log-return points.
 
     ``time`` is the candle close time (window end − 1 ms, the Beam
@@ -62,13 +63,19 @@ def log_returns(candles: DataFrame) -> DataFrame:
     non-positive open or close ask (possible only for leading gap candles
     that never saw a live tick) are dropped — ln is undefined there; the
     reference would emit -Inf/NaN which its correlation stage then skips.
+
+    ``keep_undefined=True`` keeps one row per candle instead, ``value``
+    null where ln is undefined, plus the candle's ``close_ask`` and
+    ``close_live`` (from ``complete_candles(..., with_close_live=True)``):
+    the streaming returns store, whose newest rows seed the next
+    micro-batch's carry-forward (``streaming/pipeline.py``).
     """
-    return (
-        candles
-        .where((F.col("open.ask") > 0) & (F.col("close.ask") > 0))
-        .select(
-            "key",
-            (F.col("window_end") - F.expr("INTERVAL 1 MILLISECOND")).alias("time"),
-            F.log(F.col("close.ask") / F.col("open.ask")).alias("value"),
-        )
-    )
+    defined = (F.col("open.ask") > 0) & (F.col("close.ask") > 0)
+    time = (F.col("window_end") - F.expr("INTERVAL 1 MILLISECOND")).alias("time")
+    value = F.log(F.col("close.ask") / F.col("open.ask"))
+    if keep_undefined:
+        return candles.select("key", time,
+                              F.when(defined, value).alias("value"),
+                              F.col("close.ask").alias("close_ask"),
+                              "close_live")
+    return candles.where(defined).select("key", time, value.alias("value"))

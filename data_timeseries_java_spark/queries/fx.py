@@ -1579,8 +1579,9 @@ _CORR_STREAM_REPLAY_SINKS: dict[tuple, str] = {}
 def q_fx_corr_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL incremental correlation pipeline executed through the
     STREAMING lane (`streaming/pipeline.py`): ticks replayed as an
-    out-of-order file stream → keyed-state global gap-fill candles →
-    per-batch log returns appended to the returns store →
+    out-of-order file stream → watermarked window-aggregate candles,
+    gap-filled and carried forward per micro-batch → per-batch log
+    returns appended to the returns store →
     touched-windows-only correlation recompute → log-structured store
     with in-band supersession markers — then the store is RESOLVED
     (latest authoritative batch per window) and hash-matched against

@@ -3,9 +3,10 @@
 The reference is a streaming pipeline forced through Dataflow 1.9
 batch-ish primitives (its global-window/accumulating-panes trick exists
 only because 1.9 had no keyed state — ``README.MD:17``). Spark gives the
-real thing: watermarked windowed aggregation for candles, keyed state
-(``applyInPandasWithState``) for carry-forward, and per-micro-batch
-incremental computation for the correlation stage.
+real thing: watermarked windowed aggregation for candles, per-micro-batch
+carry-forward and incremental computation for the correlation
+pipeline, and keyed state (``applyInPandasWithState``) for the
+standalone complete-candle streams.
 """
 
 from data_timeseries_java_spark.streaming.candles_stream import (

@@ -4,24 +4,28 @@ operator for complete (gap-filled, carry-forward) candles.
 Streaming equivalents of ``operators/candles.py`` (W1+A3 / A1+A2+A4 /
 W3, SURVEY.md §2.2-2.3):
 
-- :func:`streaming_ohlc_candles` — watermarked fixed-window aggregation,
-  identical aggregation expressions to the batch operator; Spark runs
-  the same logical plan incrementally against a state store. The
+- :func:`streaming_ohlc_candles` — the batch ``ohlc_candles`` over
+  watermarked ticks (minus its all-null ``open``): the same aggregate,
+  which Spark runs incrementally in the JVM against a state store. The
   watermark replaces the reference's no-late-data stance with an
   explicit policy: rows later than the watermark are dropped; candles
-  finalize (append mode) once the watermark passes window end.
+  finalize (append mode) once the watermark passes window end. The
+  streaming correlation pipeline (``streaming/pipeline.py``) builds on
+  this aggregate and completes its candles per micro-batch with the
+  batch ``complete_candles``.
 
 - :func:`streaming_complete_candles` — ONE ``applyInPandasWithState``
   operator over raw ticks that owns the whole candle lifecycle per
   instrument: partial-candle accumulation for open windows, window
   finalization at the watermark, interior gap-window synthesis, and
-  carry-forward close→open. Spark disallows a second stateful operator
+  carry-forward close→open, for sinks that want complete candles as a
+  stream of their own. Spark disallows a second stateful operator
   after a streaming aggregation in append mode, and the reference's
   accumulating-panes trick (``CompleteTimeSeriesAggCombiner.java:47-227``)
   is precisely "keyed state across windows" — so the state store is the
   honest home for all of it. State per key: the open windows' partial
   candles + the last emitted close; O(keys x open windows), a few
-  hundred bytes per instrument.
+  hundred bytes per instrument. It runs its fold in Python workers.
 
 Semantics notes (all test-asserted):
 - :func:`streaming_complete_candles` (per-key mode) synthesizes gap
@@ -36,15 +40,17 @@ Semantics notes (all test-asserted):
   operator exactly — and globally-empty windows emit nothing.
 - min/max in the flat streaming output carry prices only (the batch
   operator keeps whole ticks; the flat schema is what sinks want).
-- RESTART tightens the disorder horizon by one batch: in-run, Spark
-  filters late rows with the PREVIOUS batch's watermark (one-batch
-  lag), but a query resumed from a checkpoint filters its first batch
-  with the full committed watermark — so with delay 0, ticks arriving
-  after a restart for a window the watermark has already entered
-  (e.g. the window straddling the restart boundary, whose activity
-  marker sits at w_end − 1 ms) are dropped, where the unrestarted run
-  would have kept them. A pipeline that must survive restarts
-  mid-window should set ``watermark`` to at least one resolution;
+- RESTART of the keyed operators tightens the disorder horizon by one
+  batch (the pipeline in ``streaming/pipeline.py``, which has no
+  activity markers, does not): in-run, Spark filters late rows with
+  the PREVIOUS batch's watermark (one-batch lag), but a query resumed
+  from a checkpoint filters its first batch with the full committed
+  watermark — so with delay 0, ticks arriving after a restart for a
+  window the watermark has already entered (e.g. the window straddling
+  the restart boundary, whose activity marker sits at w_end − 1 ms)
+  are dropped, where the unrestarted run would have kept them. A
+  stream of these operators that must survive restarts mid-window
+  should set ``watermark`` to at least one resolution;
   the recovery driver gate (``queries/fx.q_recovery_stream_replay``)
   pins exactly this contract.
 """
@@ -53,6 +59,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_timeseries_java_spark.operators.candles import ohlc_candles
 
 CANDLE_OUT_SCHEMA = (
     "key string, window_start timestamp, window_end timestamp, "
@@ -76,37 +84,11 @@ STATE_SCHEMA = (
 
 def streaming_ohlc_candles(ticks: DataFrame, resolution: str = "120 seconds",
                            watermark: str = "0 seconds") -> DataFrame:
-    """Watermarked fixed-window OHLC aggregation (streaming W1+A3)."""
-    t_ms = F.unix_millis(F.col("event_time"))
-    tick = F.struct(
-        F.col("event_time").alias("time"),
-        F.col("bid"), F.col("ask"), F.col("is_live"),
-    )
-    df = (ticks
-          .withWatermark("event_time", watermark)
-          .select("key", F.window("event_time", resolution).alias("w"),
-                  tick.alias("tick"), "bid", "ask", "is_live",
-                  t_ms.alias("t_ms")))
-    agg = df.groupBy("key", "w").agg(
-        F.min(F.struct(F.col("ask"), F.col("t_ms"), F.col("tick"))).alias("mna"),
-        F.max(F.struct(F.col("ask"), (-F.col("t_ms")).alias("n"), F.col("tick"))).alias("mxa"),
-        F.min(F.struct(F.col("bid"), F.col("t_ms"), F.col("tick"))).alias("mnb"),
-        F.max(F.struct(F.col("bid"), (-F.col("t_ms")).alias("n"), F.col("tick"))).alias("mxb"),
-        F.max(F.struct(F.col("t_ms"), F.col("is_live").cast("int").alias("l"),
-                       F.col("tick"))).alias("cl"),
-        F.max("is_live").alias("is_live"),
-    )
-    return agg.select(
-        "key",
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        F.col("cl.tick").alias("close"),
-        F.col("mna.tick").alias("min_ask"),
-        F.col("mxa.tick").alias("max_ask"),
-        F.col("mnb.tick").alias("min_bid"),
-        F.col("mxb.tick").alias("max_bid"),
-        "is_live",
-    )
+    """Watermarked fixed-window OHLC aggregation (streaming W1+A3): the
+    batch :func:`~data_timeseries_java_spark.operators.candles.ohlc_candles`
+    over the watermarked ticks, minus its all-null ``open``."""
+    return ohlc_candles(ticks.withWatermark("event_time", watermark),
+                        resolution).drop("open")
 
 
 def _resolution_ms(resolution: str) -> int:

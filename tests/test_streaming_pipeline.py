@@ -70,14 +70,44 @@ def test_streaming_correlations_match_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_correlations_sparse_feed_matches_batch(spark):
+def _batch_map(spark, rows, closed_ms=None):
+    """Batch ``candles_pipeline → log_returns → pairwise_correlations``
+    over ``rows`` as {(w_start_ms, key1, key2): value}, optionally only
+    the windows that end by ``closed_ms``."""
+    ticks = spark.createDataFrame(rows, TICK_SCHEMA)
+    candles = candles_pipeline(ticks, ticks.select("key").distinct(),
+                               "120 seconds")
+    want = pairwise_correlations(log_returns(candles), CFG)
+    out = {(int(r.window_start.timestamp() * 1000), r.key1, r.key2):
+           round(r.value, 9) for r in want.collect()}
+    if closed_ms is not None:
+        out = {k: v for k, v in out.items() if k[0] + 600_000 <= closed_ms}
+    return out
+
+
+def _closed_ms(queries):
+    """The highest watermark the queries' micro-batches reported, in ms."""
+    from datetime import datetime
+
+    return max(int(datetime.fromisoformat(w.replace("Z", "+00:00"))
+                   .timestamp() * 1000)
+               for q in queries for w in
+               (p["eventTime"].get("watermark") for p in q.recentProgress)
+               if w)
+
+
+@pytest.mark.parametrize("with_universe", [True, False],
+                         ids=["universe", "no_universe"])
+def test_streaming_correlations_sparse_feed_matches_batch(spark,
+                                                          with_universe):
     """Batch parity on a SPARSE feed (globally-dead windows between two
-    active clusters): with the universe passed, the candle stage runs in
-    global gap-fill mode and emits nothing for windows no instrument
-    ticked in — the per-key mode would fabricate candles (and thus
-    correlation windows) across the dead zone. Found by driving the
-    pipeline over the (sparse) events table: per-key mode produced 49x
-    the batch row count."""
+    active clusters): gap-fill is global, so windows no instrument
+    ticked in get no candles, with or without the universe passed (the
+    keys seen so far stand in for it; every key ticks from the first
+    window here). Gap-filling each key's own skipped windows instead
+    fabricates candles, and so correlation windows, across the dead
+    zone: driven over the (sparse) events table, that produced 49x the
+    batch row count."""
     import random
     from datetime import datetime, timedelta, timezone
 
@@ -104,7 +134,8 @@ def test_streaming_correlations_sparse_feed_matches_batch(spark):
         spark.createDataFrame(sentinel, TICK_SCHEMA).coalesce(1).write.mode(
             "overwrite").parquet(f"{d}/in/f2")
 
-        universe = sorted({r[0] for r in rows}) + ["ZZ-SENTINEL"]
+        universe = (sorted({r[0] for r in rows}) + ["ZZ-SENTINEL"]
+                    if with_universe else None)
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
         q = streaming_correlations(spark, src, f"{d}/out",
@@ -116,18 +147,240 @@ def test_streaming_correlations_sparse_feed_matches_batch(spark):
                .where(~F.col("key1").startswith("ZZ-")
                       & ~F.col("key2").startswith("ZZ-")))
 
-        ticks = spark.createDataFrame(rows, TICK_SCHEMA)
-        candles = candles_pipeline(ticks, ticks.select("key").distinct(),
-                                   "120 seconds")
-        want = pairwise_correlations(log_returns(candles), CFG)
-
         got_map = {(r.w_start_ms, r.key1, r.key2): round(r.value, 9)
                    for r in got.collect()}
-        want_map = {(int(r.window_start.timestamp() * 1000), r.key1, r.key2):
-                    round(r.value, 9) for r in want.collect()}
+        want_map = _batch_map(spark, rows)
         assert set(got_map) == set(want_map)
         assert got_map == want_map
         assert len(got_map) > 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_restarts_mid_candle_match_batch_with_default_watermark(spark):
+    """The stream's restart pattern: one availableNow run per file, each
+    resuming from the checkpoint, with the files cut mid-candle. With
+    the default watermark (0 seconds) and the universe passed, every
+    window the final watermark has closed matches batch. A candle stage
+    that advanced the watermark to a window's end when it saw the
+    window open dropped the ticks the next file brought for the candle
+    straddling the cut."""
+    import random
+    from datetime import datetime, timedelta, timezone
+
+    keys = ["AUD/USD", "EUR/USD", "GBP/USD", "USD/JPY"]
+    t0 = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    rng = random.Random(5)
+    px = dict.fromkeys(keys, 1.0)
+    rows = []
+    for i in range(40 * 60 // 7):                  # a tick every 7 s
+        for k in keys:
+            px[k] *= 1.0 + rng.gauss(0.0, 0.001)
+            rows.append((k, t0 + timedelta(seconds=7 * i), px[k],
+                         px[k] + 0.001, True))
+    cuts = [t0 + timedelta(minutes=m, seconds=50) for m in (9, 19, 29)]
+    bounds = [t0] + cuts + [t0 + timedelta(hours=1)]
+
+    d = tempfile.mkdtemp(prefix="spipe_restart_")
+    try:
+        runs = []
+        for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+            chunk = [r for r in rows if lo <= r[1] < hi]
+            spark.createDataFrame(chunk, TICK_SCHEMA).coalesce(1).write \
+                .parquet(f"{d}/in/f{i}")
+            src = spark.readStream.schema(TICK_SCHEMA).parquet(f"{d}/in/f*")
+            q = streaming_correlations(spark, src, f"{d}/out",
+                                       resolution="120 seconds", config=CFG,
+                                       universe=keys)
+            q.awaitTermination(180)
+            assert q.exception() is None
+            runs.append(q)
+        closed_ms = _closed_ms(runs)
+
+        got = {(r.w_start_ms, r.key1, r.key2): round(r.value, 9)
+               for r in read_streaming_correlations(spark, f"{d}/out")
+               .where(F.col("w_start_ms") + 600_000 <= closed_ms)
+               .collect()}
+        want = _batch_map(spark, rows, closed_ms)
+        assert len(want) == 42
+        assert got == want
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_trigger_path_starts_no_python_worker(spark, monkeypatch):
+    """Every trigger runs in the JVM: the candle stage is a window
+    aggregate (no ``applyInPandasWithState`` or ``mapInPandas`` node in
+    the micro-batch plan), and ``foreachBatch`` turns its driver-side
+    lists into literals, not ``createDataFrame`` rows."""
+    from datetime import datetime, timedelta, timezone
+
+    from pyspark.sql import SparkSession
+
+    t0 = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    rows = [(k, t0 + timedelta(seconds=30 * i), 1.0 + 0.01 * (i % 7) + j,
+             1.001 + 0.01 * (i % 5) + j, True)
+            for i in range(60) for j, k in enumerate(("A", "B", "C"))
+            if not (k == "C" and 10 <= i < 20)]
+    d = tempfile.mkdtemp(prefix="spipe_jvm_")
+    try:
+        for i in range(2):
+            spark.createDataFrame(rows[i * 90:(i + 1) * 90], TICK_SCHEMA) \
+                .coalesce(1).write.parquet(f"{d}/in/f{i}")
+
+        def refuse(*a, **k):
+            raise AssertionError("createDataFrame on the trigger path")
+
+        monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+        src = (spark.readStream.schema(TICK_SCHEMA)
+               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
+        q = streaming_correlations(spark, src, f"{d}/out",
+                                   resolution="120 seconds", config=CFG,
+                                   universe=["A", "B", "C"])
+        q.awaitTermination(180)
+        assert q.exception() is None
+        plan = (q._jsq.streamingQuery().lastExecution().executedPlan()
+                .toString())
+        assert "StateStoreSave" in plan
+        assert "InPandas" not in plan and "PandasWithState" not in plan
+        assert read_streaming_correlations(spark, f"{d}/out").count() > 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_non_live_ticks_across_batch_boundary_match_batch(spark):
+    """A key whose candles so far are all non-live (ticks with a price
+    but ``is_live=false``) keeps no live close to carry: batch opens its
+    next candle at its last close but back-fills its gap candles with
+    0.0, whose returns are undefined. Its last candle lands in the seed
+    partition of a later micro-batch; seeding it as a live close would
+    carry that price into the gaps and emit 0.0 returns batch lacks."""
+    from datetime import datetime, timedelta, timezone
+
+    t0 = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    rows = []
+    for i in range(28):                          # a tick every 30 s, 14 min
+        t = t0 + timedelta(seconds=30 * i)
+        for j, k in enumerate(("A", "B")):
+            px = 1.0 + 0.01 * ((i * (j + 2)) % 7)
+            rows.append((k, t, px, px + 0.001, True))
+        if i < 8:                                # minutes 0-3 only
+            px = 2.0 + 0.01 * (i % 3)
+            rows.append(("C", t, px, px + 0.001, False))
+    d = tempfile.mkdtemp(prefix="spipe_nonlive_")
+    try:
+        cut = t0 + timedelta(minutes=6)
+        for i, chunk in enumerate(([r for r in rows if r[1] < cut],
+                                   [r for r in rows if r[1] >= cut])):
+            spark.createDataFrame(chunk, TICK_SCHEMA).coalesce(1).write \
+                .parquet(f"{d}/in/f{i}")
+        src = (spark.readStream.schema(TICK_SCHEMA)
+               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
+        q = streaming_correlations(spark, src, f"{d}/out",
+                                   resolution="120 seconds", config=CFG,
+                                   universe=["A", "B", "C"])
+        q.awaitTermination(180)
+        assert q.exception() is None
+        closed_ms = _closed_ms([q])
+
+        got = {(r.key, r.t, round(r.value, 12)) for r in
+               spark.read.parquet(f"{d}/out/returns")
+               .where(F.col("value").isNotNull())
+               .select("key", F.unix_millis("time").alias("t"), "value")
+               .collect()}
+        ticks = spark.createDataFrame(rows, TICK_SCHEMA)
+        want = {(r.key, r.t, round(r.value, 12)) for r in
+                log_returns(candles_pipeline(
+                    ticks, ticks.select("key").distinct(), "120 seconds"))
+                .select("key", F.unix_millis("time").alias("t"), "value")
+                .where(F.col("t") < closed_ms).collect()}
+        assert {r for r in want if r[0] == "C"}
+        assert got == want
+
+        got_corr = {(r.w_start_ms, r.key1, r.key2): round(r.value, 9)
+                    for r in read_streaming_correlations(spark, f"{d}/out")
+                    .where(F.col("w_start_ms") + 600_000 <= closed_ms)
+                    .collect()}
+        assert got_corr == _batch_map(spark, rows, closed_ms)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_seed_partition_walks_down_to_newest_earlier_batch(spark):
+    """The seed is the newest ``batch_id=`` partition below the current
+    batch, however many partitions the store holds, skipping ids that
+    wrote nothing and ignoring ids at or above the current one (a
+    re-executed batch)."""
+    from data_timeseries_java_spark.streaming.pipeline import (
+        _RETURNS_ROW_SCHEMA,
+        _seed_partition,
+    )
+
+    d = tempfile.mkdtemp(prefix="spipe_seed_")
+    try:
+        returns = f"{d}/returns"
+        assert _seed_partition(spark, returns, 5) is None
+        spark.createDataFrame(
+            [("A", None, None, 1.0, True)], _RETURNS_ROW_SCHEMA) \
+            .coalesce(1).write.parquet(f"{d}/part")
+        written = [b for b in range(0, 300, 2) if b not in (292, 294)]
+        for b in written:
+            shutil.copytree(f"{d}/part", f"{returns}/batch_id={b}")
+
+        def seed_id(batch_id):
+            seed = _seed_partition(spark, returns, batch_id)
+            if seed is None:
+                return None
+            (path,) = seed.inputFiles()
+            return int(path.split("batch_id=")[1].split("/")[0])
+
+        assert seed_id(0) is None
+        assert seed_id(1) == 0
+        assert seed_id(290) == 288
+        assert seed_id(291) == 290
+        assert seed_id(296) == 290         # 292 and 294 wrote nothing
+        assert seed_id(297) == 296
+        assert seed_id(400) == 298
+        shutil.rmtree(f"{returns}/batch_id=0")
+        assert seed_id(1) is None           # only later partitions left
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_broadcast_membership_matches_batch(spark, monkeypatch):
+    """Above ``_IN_LITERAL_MAX`` touched windows the membership filter is
+    a broadcast semi-join and the marker rows ``createDataFrame`` rows;
+    the snapshot still matches batch."""
+    from datetime import datetime, timedelta, timezone
+
+    from data_timeseries_java_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "_IN_LITERAL_MAX", 1)
+    t0 = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    rows = [(k, t0 + timedelta(seconds=30 * i),
+             1.0 + 0.01 * ((i * (j + 2)) % 7) + j,
+             1.001 + 0.01 * ((i * (j + 3)) % 5) + j, True)
+            for i in range(60) for j, k in enumerate(("A", "B", "C"))]
+    d = tempfile.mkdtemp(prefix="spipe_bcast_")
+    try:
+        for i in range(2):
+            spark.createDataFrame(rows[i * 90:(i + 1) * 90], TICK_SCHEMA) \
+                .coalesce(1).write.parquet(f"{d}/in/f{i}")
+        src = (spark.readStream.schema(TICK_SCHEMA)
+               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
+        q = streaming_correlations(spark, src, f"{d}/out",
+                                   resolution="120 seconds", config=CFG,
+                                   universe=["A", "B", "C"])
+        q.awaitTermination(180)
+        assert q.exception() is None
+        closed_ms = _closed_ms([q])
+        got = {(r.w_start_ms, r.key1, r.key2): round(r.value, 9)
+               for r in read_streaming_correlations(spark, f"{d}/out")
+               .where(F.col("w_start_ms") + 600_000 <= closed_ms)
+               .collect()}
+        want = _batch_map(spark, rows, closed_ms)
+        assert len(want) > 0
+        assert got == want
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
