@@ -255,9 +255,9 @@ def main() -> None:
     cent_emb = materialize(centroid_vectors(kmeans_centroids_fixedk(
         emb_static, k=k_emb, sample_size=SAMPLE_PER_K * k_emb,
         iterations=KMEANS_ITERS)))
-    # instrument universe for the fx pipeline's global gap-fill mode
-    # (events are a SPARSE feed: per-key mode would fabricate candles
-    # for globally-dead windows and diverge from batch semantics)
+    # instrument universe for the global gap-fill of the complete-candle
+    # stream and the fx pipeline (events are a SPARSE feed: without it,
+    # keys that first tick late lack batch's leading gap candles)
     universe = [r.key for r in
                 spark.read.parquet(f"{ticks_dir}/f*")
                 .select("key").distinct().collect()]
@@ -268,7 +268,8 @@ def main() -> None:
         ("ohlc_candles", lambda: streaming_ohlc_candles(
             tick_src(), "120 seconds")),
         ("complete_candles_state", lambda: streaming_complete_candles(
-            tick_src(), "120 seconds")),
+            spark, tick_src(), f"{work}/candles", "120 seconds",
+            universe=universe)),
         ("dedup_exact", lambda: streaming_dedup_exact(
             ev_src(), ["user_id", "event_type"], "ts", "30 minutes")),
         ("dedup_content", lambda: streaming_dedup_content(

@@ -135,6 +135,21 @@ def _ms(col):
     return F.unix_millis(col)
 
 
+def _candle_sentinel(spark: SparkSession, t1_ms: int) -> DataFrame:
+    """The flush tick a candle-stream replay writes after its last real
+    file: 30 days past ``t1_ms``, it pushes the watermark past every
+    real window; its own window never closes, and its key
+    (``SENTINEL_KEY``) is filtered from the sink."""
+    from data_timeseries_java_spark.streaming.replay import SENTINEL_KEY
+
+    return spark.createDataFrame([(SENTINEL_KEY,)], "key string").select(
+        "key",
+        F.timestamp_millis(F.lit(t1_ms + 30 * 86_400_000))
+        .alias("event_time"),
+        F.lit(1.0).alias("bid"), F.lit(1.0).alias("ask"),
+        F.lit(True).alias("is_live"))
+
+
 def q_fx_candles_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1+A3: fixed-window partial OHLC over live ticks (no gap-fill)."""
     ticks, _ = _ticks_and_keys(spark, sf_dir)
@@ -299,10 +314,11 @@ def q_fx_candles_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fx_candles_complete pipeline executed through the STREAMING
     lane: the events tick feed is replayed as a file stream (3
     time-bucketed files, rows shuffled WITHIN each file so intra-batch
-    arrival order is scrambled), run through the keyed-state global
-    gap-fill candle operator (`streaming/candles_stream.py` —
-    applyInPandasWithState, watermark-sealed windows, far-future
-    sentinel flushes the tail), and the sink is compared against the
+    arrival order is scrambled), run through the complete-candle
+    stream (`streaming/candles_stream.py` — the JVM window aggregate,
+    watermark-sealed windows completed per micro-batch with global
+    gap-fill, far-future sentinel flushes the tail), and the sink is
+    compared against the
     SAME DuckDB oracle as the batch query — a three-way hash match on
     a stream-PRODUCED result, not just a stream==batch pytest claim.
 
@@ -318,12 +334,12 @@ def q_fx_candles_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
+        drive_query,
         read_replay_sink,
-        run_to_parquet_sink,
         write_replay_buckets,
         write_sentinel_file,
     )
@@ -343,23 +359,19 @@ def q_fx_candles_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                              t0_ms, t1_ms - t0_ms + 1, base,
                              ["key", "event_time"])
         # far-future sentinel: pushes the watermark past every real
-        # window so the keyed state flushes; its own (never-sealed)
+        # window so the aggregate finalizes them; its own (never-sealed)
         # window stays in state and its key is filtered from the sink
-        sent = spark.createDataFrame(
-            [(SENTINEL_KEY,)], "key string").select(
-            "key",
-            F.timestamp_millis(F.lit(t1_ms + 30 * 86_400_000))
-            .alias("event_time"),
-            F.lit(1.0).alias("bid"), F.lit(1.0).alias("ask"),
-            F.lit(True).alias("is_live"))
-        write_sentinel_file(sent, f"{work}/in", n_files, base)
+        write_sentinel_file(_candle_sentinel(spark, t1_ms), f"{work}/in",
+                            n_files, base)
 
         src = (spark.readStream.schema(ticks.schema)
                .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/f*"))
-        candles = streaming_complete_candles_global(src, universe, RES)
-        sink = run_to_parquet_sink(candles, f"{work}/out", f"{work}/ckpt")
+        drive_query(streaming_complete_candles(spark, src, work, RES,
+                                               universe=universe),
+                    what="fx candle stream replay")
+        sink = f"{work}/candles"
         shutil.rmtree(f"{work}/in", ignore_errors=True)
-        shutil.rmtree(f"{work}/ckpt", ignore_errors=True)
+        shutil.rmtree(f"{work}/checkpoint", ignore_errors=True)
         _STREAM_REPLAY_SINKS[cache_key] = sink
     flat = (read_replay_sink(spark, sink)
             .where(F.col("key") != SENTINEL_KEY))
@@ -1980,9 +1992,9 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     first two time-bucket files and terminates (availableNow); the
     remaining files and the watermark-flush sentinel are written
     AFTERWARDS and phase 2 starts fresh from the checkpoint, restoring
-    the keyed state (unsealed windows + carry-forward closes from
-    phase 1) and processing only the new files. The union of both
-    phases' sink partitions must hash-match the SAME batch oracle as
+    the aggregate's state (unsealed windows), seeding carry-forward
+    from phase 1's sink and processing only the new files. The union
+    of both phases' sink partitions must hash-match the SAME batch oracle as
     `fx_candles_stream_replay` — if state restore dropped or replayed
     anything (double-processed files, lost pending windows, broken
     carry-forward across the restart boundary) the hash breaks.
@@ -1994,12 +2006,13 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
+        drive_query,
         read_replay_sink,
-        run_to_parquet_sink,
+        write_replay_files,
         write_sentinel_file,
     )
 
@@ -2020,53 +2033,42 @@ def q_recovery_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_files - 1),
             F.floor((_ms(F.col("event_time")) - F.lit(t0_ms))
                     * n_files / F.lit(span)))
-        for i in (0, 1):
-            (ticks.where(bucket == i)
-             .orderBy(F.md5(F.concat_ws(":", "key", "event_time")))
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{work}/in/f{i}"))
-        import glob as _glob
-        for i in (0, 1):
-            for p in _glob.glob(f"{work}/in/f{i}/*"):
-                os.utime(p, (base + i * 10, base + i * 10))
+        write_replay_files(ticks.withColumn("_f", bucket).where(bucket < 2),
+                           "_f", f"{work}/in", 2, base,
+                           ["key", "event_time"])
 
         def src():
             return (spark.readStream.schema(ticks.schema)
                     .option("maxFilesPerTrigger", 1)
                     .parquet(f"{work}/in/f*"))
 
-        # watermark delay = one resolution: on RESTART, Spark's
-        # late-row filter loses its one-batch lag (the first resumed
-        # batch filters with the full committed watermark, not the
-        # previous batch's), so a 0-delay stream would drop ticks of
-        # the window straddling the restart boundary — found by this
-        # gate; delay >= resolution keeps every in-window tick inside
-        # the restart-tightened horizon
-        candles1 = streaming_complete_candles_global(src(), universe, RES,
-                                                     watermark=RES)
-        run_to_parquet_sink(candles1, f"{work}/out", f"{work}/ckpt")
+        # watermark delay = one resolution: phase 1 then ends with
+        # the last two candles still open in the aggregate's state
+        # store, so phase 2 must restore partial candles from the
+        # checkpoint as well as seed carry-forward from the sink. The
+        # default 0-second delay across a restart is pinned by
+        # tests/test_streaming_pipeline.py.
+        drive_query(streaming_complete_candles(spark, src(), work, RES,
+                                               watermark=RES,
+                                               universe=universe),
+                    what="recovery candle stream replay, phase 1")
 
         # phase 2: the rest of the feed + the flush sentinel appear,
         # and a NEW query resumes from the retained checkpoint
-        (ticks.where(bucket == 2)
-         .orderBy(F.md5(F.concat_ws(":", "key", "event_time")))
-         .coalesce(1).write.mode("overwrite").parquet(f"{work}/in/f2"))
-        for p in _glob.glob(f"{work}/in/f2/*"):
-            os.utime(p, (base + 20, base + 20))
-        sent = spark.createDataFrame(
-            [(SENTINEL_KEY,)], "key string").select(
-            "key",
-            F.timestamp_millis(F.lit(t1_ms + 30 * 86_400_000))
-            .alias("event_time"),
-            F.lit(1.0).alias("bid"), F.lit(1.0).alias("ask"),
-            F.lit(True).alias("is_live"))
-        write_sentinel_file(sent, f"{work}/in", n_files, base)
+        write_sentinel_file(
+            ticks.where(bucket == 2)
+            .orderBy(F.md5(F.concat_ws(":", "key", "event_time"))),
+            f"{work}/in", 2, base)
+        write_sentinel_file(_candle_sentinel(spark, t1_ms), f"{work}/in",
+                            n_files, base)
 
-        candles2 = streaming_complete_candles_global(src(), universe, RES,
-                                                     watermark=RES)
-        sink = run_to_parquet_sink(candles2, f"{work}/out", f"{work}/ckpt")
+        drive_query(streaming_complete_candles(spark, src(), work, RES,
+                                               watermark=RES,
+                                               universe=universe),
+                    what="recovery candle stream replay, phase 2")
+        sink = f"{work}/candles"
         shutil.rmtree(f"{work}/in", ignore_errors=True)
-        shutil.rmtree(f"{work}/ckpt", ignore_errors=True)
+        shutil.rmtree(f"{work}/checkpoint", ignore_errors=True)
         _RECOVERY_REPLAY_SINKS[cache_key] = sink
     flat = (read_replay_sink(spark, sink)
             .where(F.col("key") != SENTINEL_KEY))
@@ -4786,14 +4788,14 @@ _LATE_STATE_REPLAY_SINKS: dict[tuple, str] = {}
 
 def q_late_data_state_stream_replay(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
-    """The late-data drop contract on the KEYED-STATE path:
+    """The late-data drop contract on the COMPLETE-CANDLE path:
     late_data_stream_replay pins it for the watermarked window
-    aggregation; this gate pins it for the stateful global gap-fill
-    candle operator (applyInPandasWithState), whose state-side
-    consequences are deeper — a dropped late tick must also not
+    aggregation; this gate pins it for the complete-candle stream
+    (that aggregate plus per-batch global gap-fill and carry-forward),
+    whose consequences are deeper — a dropped late tick must also not
     perturb gap synthesis or carry-forward for any OTHER key, because
-    its window-activity marker is itself late and dropped by the same
-    watermark filter. The oracle is therefore the COMPLETE batch
+    the windows it would have completed were finalized before it
+    arrived. The oracle is therefore the COMPLETE batch
     candle derivation (gap rows, 0.0 leading back-fill, carry-forward
     close -> open) computed over events MINUS the identical md5-carved
     late set: a hash match proves drops, gap semantics and carry all
@@ -4804,12 +4806,12 @@ def q_late_data_state_stream_replay(spark: SparkSession,
     import time as _time
 
     from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
+        streaming_complete_candles,
     )
     from data_timeseries_java_spark.streaming.replay import (
         SENTINEL_KEY,
+        drive_query,
         read_replay_sink,
-        run_to_parquet_sink,
         write_replay_buckets,
         write_sentinel_file,
     )
@@ -4833,21 +4835,17 @@ def q_late_data_state_stream_replay(spark: SparkSession,
                              ["key", "event_time"])
         write_sentinel_file(ticks.where(late).coalesce(1),
                             f"{work}/in", n_files, base)
-        sent = spark.createDataFrame(
-            [(SENTINEL_KEY,)], "key string").select(
-            "key",
-            F.timestamp_millis(F.lit(t1_ms + 30 * 86_400_000))
-            .alias("event_time"),
-            F.lit(1.0).alias("bid"), F.lit(1.0).alias("ask"),
-            F.lit(True).alias("is_live"))
-        write_sentinel_file(sent, f"{work}/in", n_files + 1, base)
+        write_sentinel_file(_candle_sentinel(spark, t1_ms), f"{work}/in",
+                            n_files + 1, base)
 
         src = (spark.readStream.schema(ticks.schema)
                .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/f*"))
-        candles = streaming_complete_candles_global(src, universe, RES)
-        sink = run_to_parquet_sink(candles, f"{work}/out", f"{work}/ckpt")
+        drive_query(streaming_complete_candles(spark, src, work, RES,
+                                               universe=universe),
+                    what="late-data candle stream replay")
+        sink = f"{work}/candles"
         shutil.rmtree(f"{work}/in", ignore_errors=True)
-        shutil.rmtree(f"{work}/ckpt", ignore_errors=True)
+        shutil.rmtree(f"{work}/checkpoint", ignore_errors=True)
         _LATE_STATE_REPLAY_SINKS[cache_key] = sink
     flat = (read_replay_sink(spark, sink)
             .where(F.col("key") != SENTINEL_KEY))

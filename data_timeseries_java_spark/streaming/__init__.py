@@ -3,10 +3,11 @@
 The reference is a streaming pipeline forced through Dataflow 1.9
 batch-ish primitives (its global-window/accumulating-panes trick exists
 only because 1.9 had no keyed state — ``README.MD:17``). Spark gives the
-real thing: watermarked windowed aggregation for candles, per-micro-batch
-carry-forward and incremental computation for the correlation
-pipeline, and keyed state (``applyInPandasWithState``) for the
-standalone complete-candle streams.
+real thing: watermarked windowed aggregation for candles, and
+per-micro-batch gap-fill and carry-forward over its finalized candles
+(one completion, shared by the complete-candle stream and the
+correlation pipeline), with incremental computation for the
+correlation.
 """
 
 from data_timeseries_java_spark.streaming.candles_stream import (

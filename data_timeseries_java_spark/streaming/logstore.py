@@ -1,6 +1,16 @@
-"""Shared mechanics for the log-structured sketch stores (CMS top-k,
-grid-histogram quantiles): batch_id-partitioned parquet partials with
-crash-safe compaction.
+"""Shared mechanics for the log-structured stores: batch_id-partitioned
+parquet with crash-safe compaction.
+
+Which store relies on which part:
+
+- ``FOLD_OFFSET``, ``swap_in_fold`` and ``local_store_path``: every
+  compacting store — the CMS top-k and grid-histogram quantile sketch
+  stores, and the streaming correlation store
+  (``streaming/pipeline.py``).
+- ``active`` (resolve by ``kind='fold'`` rows): the two sketch stores
+  only. The correlation store resolves by claim rank instead: each
+  window's latest claim, ranked ``(batch_id % FOLD_OFFSET, batch_id)``,
+  wins (``pipeline.read_streaming_correlations``).
 
 The two hazards every compactor here closes (found by review on the
 top-k store, ADVICE r6):
@@ -9,16 +19,17 @@ top-k store, ADVICE r6):
   retained checkpoint writes ``batch_id = max real id + 1`` with
   ``mode('overwrite')``; a fold written at that id would be silently
   replaced by the first post-compaction micro-batch. Folds live at
-  ``max_seen + FOLD_OFFSET`` instead, an id a per-trigger counter can
-  never reach.
+  ``FOLD_OFFSET`` above the ids they fold instead, an id a per-trigger
+  counter can never reach.
 - **crash window** — a process dying between writing the fold and
-  removing the old batch dirs leaves BOTH on disk; a resolve summing
-  both would double every count. Folds carry one ``kind='fold'`` row
-  per superseded batch id (prior folds' rows ride forward), and every
-  resolve excludes superseded partitions first. The fold itself is
-  staged in a dot-prefixed temp dir (invisible to parquet readers) and
-  renamed into place atomically BEFORE the removals, so every crash
-  point resolves to correct totals.
+  removing the old batch dirs leaves BOTH on disk. ``swap_in_fold``
+  stages the fold in a dot-prefixed temp dir (invisible to parquet
+  readers) and renames it into place atomically BEFORE the removals,
+  and each resolve ignores the leftovers: the sketch stores because a
+  fold carries one ``kind='fold'`` row per superseded batch id (prior
+  folds' rows ride forward) and ``active`` excludes those partitions,
+  the correlation store because the fold's claims outrank the batches
+  it folded. So every crash point resolves to correct results.
 """
 
 from __future__ import annotations

@@ -22,7 +22,9 @@ aggregate" streams:
    literals), and carry-forward runs the batch
    :func:`~data_timeseries_java_spark.operators.candles.complete_candles`
    seeded with every key's last close from the newest earlier partition
-   of the returns store;
+   of the returns store. Steps 1-2 are the helpers of
+   :func:`~data_timeseries_java_spark.streaming.candles_stream.streaming_complete_candles`,
+   so both streams complete candles one way;
 3. each batch writes one row per complete candle (log return, ``value``
    null where ln is undefined, and the close that seeds the next
    batch, ``close_ask`` and ``close_live``) to a
@@ -70,9 +72,6 @@ parquet here keeps the container dependency-free.
 
 from __future__ import annotations
 
-import json
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -81,12 +80,13 @@ from data_timeseries_java_spark.operators import (
     log_returns,
     pairwise_correlations,
 )
-from data_timeseries_java_spark.operators.candles import (
-    complete_candles,
-    gap_candles,
-)
 from data_timeseries_java_spark.streaming.candles_stream import (
+    _complete,
+    _finalized,
+    _literal_rows,
     _resolution_ms,
+    _seed_candle,
+    _seed_partition,
     streaming_ohlc_candles,
 )
 from data_timeseries_java_spark.streaming.logstore import (
@@ -99,6 +99,15 @@ from data_timeseries_java_spark.streaming.logstore import (
 # broadcast left-semi join instead of a literal IN; the list itself
 # stays a tiny driver-side long array either way.
 _IN_LITERAL_MAX = 10_000
+
+# A batch touching more sliding windows than this fails. The count is
+# bounded by (batch time span / slide) + window / slide, so only a
+# mis-set slide (seconds where minutes were meant, a 60-180x inflation)
+# gets near it, and would inflate the driver-side window list and the
+# batch's marker rows with it. The bound allows legitimate
+# decade-replay triggers: at the 10x volume decade each availableNow
+# trigger spans ~37 days, ~10.8k five-minute slides.
+_MAX_WINDOWS_PER_TRIGGER = 250_000
 
 # Correlation stores up to this many file bytes resolve with a window,
 # larger ones with a broadcast claim join (read_streaming_correlations).
@@ -119,64 +128,6 @@ _CORR_SCHEMA = ("window_start timestamp, window_end timestamp, key1 string, "
                 "is_nan boolean, w_start_ms bigint, batch_id bigint")
 
 
-def _literal_rows(spark: SparkSession, rows: list[tuple],
-                  schema: str) -> DataFrame:
-    """Driver-side ``rows`` with DDL ``schema`` as a frame, sent as ONE
-    JSON string literal that the JVM parses: no Python rows are
-    converted, no Python worker starts, and building it is one call,
-    where a ``lit`` per value costs a Py4J round trip each (100
-    two-column rows: 0.03 s against 2.7 s)."""
-    fields = [f.split() for f in schema.split(",")]
-    doc = json.dumps([{n: v for (n, _), v in zip(fields, row)}
-                      for row in rows])
-    ddl = ",".join(f"{n}:{t}" for n, t in fields)
-    return spark.range(1).select(F.inline(F.from_json(
-        F.lit(doc), f"array<struct<{ddl}>>")))
-
-
-def _seed_partition(spark: SparkSession, returns_path: str,
-                    batch_id: int) -> DataFrame | None:
-    """The returns store's newest partition below ``batch_id``, or None.
-    Every finalized window has a row for every key seen so far, so that
-    partition holds every key's latest close. It is found without a
-    Spark job and on any URI: a Hadoop ``exists`` per id, walking down
-    from ``batch_id - 1``. The walk stops at the first hit, usually one
-    or two ids down (an availableNow run's data batch writes nothing),
-    so its cost does not grow with the store; before the first write
-    the store does not exist and no id is tried. It is read by its own
-    path, so the read lists one directory."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(returns_path)
-    fs = root.getFileSystem(
-        spark._jsparkSession.sessionState().newHadoopConf())
-    if not fs.exists(root):
-        return None
-    for k in range(batch_id - 1, -1, -1):
-        part = f"{returns_path}/batch_id={k}"
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(part)):
-            return spark.read.schema(_RETURNS_ROW_SCHEMA).parquet(part)
-    return None
-
-
-def _finalized(live: DataFrame, seed: DataFrame | None
-               ) -> tuple[dict[int, set[str]], set[str]]:
-    """One job: the batch's finalized windows (``ws``, start ms → keys
-    with a candle there), and every key seen so far (those keys plus
-    the seed partition's). The rows are candle-sized and come back
-    ungrouped, so the job has no shuffle of its own."""
-    probe = live.select("ws", "key")
-    if seed is not None:
-        probe = probe.unionByName(
-            seed.select(F.lit(None).cast("bigint").alias("ws"), "key"))
-    final: dict[int, set[str]] = {}
-    seen = set()
-    for ws, key in probe.collect():
-        seen.add(key)
-        if ws is not None:
-            final.setdefault(ws, set()).add(key)
-    return final, seen
-
-
 def _touched_slides(windows, res_ms: int, win_ms: int,
                     slide_ms: int) -> list[int]:
     """Start ms of every sliding window that holds the return of a
@@ -192,52 +143,12 @@ def _touched_slides(windows, res_ms: int, win_ms: int,
     return sorted(out)
 
 
-def _complete(spark: SparkSession, live: DataFrame, seed: DataFrame | None,
-              final: dict[int, set[str]], keys: set[str],
-              res_ms: int) -> DataFrame:
-    """The batch's complete candles: its finalized candles ``live``, plus
-    a gap candle for each of ``keys`` that a finalized window lacks,
-    carried forward by :func:`complete_candles` from the seed
-    partition's closes. A seed row enters as a candle at its own close
-    time, before every finalized window, live when its close is or
-    carries a live close (``close_live``), and is dropped again after
-    completion. So a key that has only had non-live candles opens the
-    next candle at its last close but back-fills later gaps with 0.0,
-    as batch does."""
-    parts = [live.drop("ws")]
-    cols = parts[0].columns
-    gaps = [(k, w) for w, present in sorted(final.items())
-            for k in sorted(keys - present)]
-    if gaps:
-        ws = F.timestamp_millis(F.col("ws"))
-        parts.append(gap_candles(
-            _literal_rows(spark, gaps, "key string, ws bigint").select(
-                "key", ws.alias("window_start"),
-                (ws + F.expr(f"INTERVAL {res_ms} MILLISECONDS"))
-                .alias("window_end"))))
-    if seed is not None:
-        close = F.struct(F.col("time"),
-                         F.lit(None).cast("double").alias("bid"),
-                         F.col("close_ask").alias("ask"),
-                         F.col("close_live").alias("is_live"))
-        parts.append(seed.select(
-            "key", F.col("time").alias("window_start"),
-            F.col("time").alias("window_end"),
-            *[close.alias(c) for c in
-              ("close", "min_ask", "max_ask", "min_bid", "max_bid")],
-            F.col("close_live").alias("is_live")))
-    union = reduce(lambda a, b: a.unionByName(b.select(cols)), parts)
-    return complete_candles(union, with_close_live=True).where(
-        F.col("window_start") >= F.timestamp_millis(F.lit(min(final))))
-
-
 def streaming_correlations(spark: SparkSession, ticks: DataFrame,
                            work_dir: str,
                            resolution: str = "120 seconds",
                            config: CorrelationConfig | None = None,
                            watermark: str = "0 seconds",
-                           universe: list[str] | None = None,
-                           max_windows_per_trigger: int = 250_000):
+                           universe: list[str] | None = None):
     """Start the full streaming pipeline; returns the StreamingQuery.
 
     Results land log-structured in ``{work_dir}/correlations`` keyed by
@@ -264,20 +175,9 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
     ``tests/test_streaming_pipeline.py``). A candle whose ticks arrive
     out of order across files needs a delay that covers that disorder.
 
-    ``max_windows_per_trigger`` bounds the per-trigger driver-side
-    touched-window list: it is structurally bounded by
-    (batch time span / slide) + window/slide, but a mis-set slide
-    (seconds where minutes were meant, a 60-180x inflation) would
-    silently blow the list up — fail loudly instead. The default
-    allows legitimate decade-replay triggers (the round-12 streaming
-    outlier audit tripped the old 10k limit at the 10x volume decade,
-    where each availableNow trigger legitimately spans ~37 days =
-    ~10.8k five-minute slides) while still catching the mis-set-slide
-    arithmetic at any realistic replay size. Membership filtering
-    switches from a literal IN to a broadcast semi-join above
-    ``_IN_LITERAL_MAX`` windows so the PLAN stays small either way —
-    only the driver-side list (8 bytes/window) and the marker rows
-    scale with the count.
+    A batch that touches more than ``_MAX_WINDOWS_PER_TRIGGER`` sliding
+    windows raises ``ValueError`` before it writes anything: its slide
+    is almost surely mis-set.
 
     ``resolution`` and ``config``'s window and slide are
     ``"<int> <unit>"`` durations: the driver derives the touched
@@ -297,6 +197,11 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
     returns_path = f"{work_dir}/returns"
     corr_path = f"{work_dir}/correlations"
     candles = streaming_ohlc_candles(ticks, resolution, watermark)
+    # A return row keeps its candle's close ask, stamped at window
+    # end - 1 ms; returns read neither the carried close's time nor its
+    # bid.
+    seed_candle = _seed_candle(F.col("time"), F.lit(None).cast("double"),
+                               F.col("close_ask"), F.col("close_live"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Cached with the window start in ms, which _finalized
@@ -305,17 +210,20 @@ def streaming_correlations(spark: SparkSession, ticks: DataFrame,
         live = batch_df.withColumn(
             "ws", F.unix_millis("window_start")).cache()
         try:
-            seed = _seed_partition(spark, returns_path, batch_id)
+            seed = _seed_partition(spark, returns_path, batch_id,
+                                   _RETURNS_ROW_SCHEMA)
+            if seed is not None:
+                seed = seed.select(*seed_candle)
             final, seen = _finalized(live, seed)
             if not final:
                 return
             wins = _touched_slides(final, res_ms, win_ms, slide_ms)
-            if len(wins) > max_windows_per_trigger:
+            if len(wins) > _MAX_WINDOWS_PER_TRIGGER:
                 raise ValueError(
                     f"batch {batch_id} touches {len(wins)} sliding "
-                    f"windows (> {max_windows_per_trigger}); check the "
-                    f"slide duration — this list becomes a literal "
-                    f"IN-predicate and must stay small")
+                    f"windows (> {_MAX_WINDOWS_PER_TRIGGER}); check the "
+                    f"slide duration: a mis-set slide inflates the "
+                    f"driver-side window list and the marker rows")
             completed = _complete(spark, live, seed, final,
                                   seen.union(universe or ()), res_ms)
             # foreachBatch is at-least-once: a batch re-executed after a

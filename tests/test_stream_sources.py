@@ -27,6 +27,7 @@ from data_timeseries_java_spark.sources import (
     replay_bus_capture,
 )
 from data_timeseries_java_spark.streaming import streaming_complete_candles
+from data_timeseries_java_spark.streaming.replay import read_replay_sink
 
 
 @pytest.fixture(scope="module")
@@ -82,18 +83,16 @@ def test_malformed_payloads_are_dropped(spark):
     assert len(out) == 1 and out[0].key == "A"
 
 
-def test_bus_stream_candles_match_batch(spark, bus_capture_dir):
+def test_bus_stream_candles_match_batch(spark, bus_capture_dir, tmp_path):
     """Replay the capture through the bus parse into the complete-candle
-    stateful operator; output must equal the batch pipeline on the same
-    ticks — the reference's TS-1..TS-5 demo goldens transitively."""
+    stream; output must equal the batch pipeline on the same ticks —
+    the reference's TS-1..TS-5 demo goldens transitively."""
     src = replay_bus_capture(spark, bus_capture_dir + "/f*",
                              max_files_per_trigger=1)
-    out = streaming_complete_candles(src, "120 seconds").select(
-        "key", "window_start", "open_ask", "close_ask", "is_live")
-    q = (out.writeStream.format("memory").queryName("bus_candles")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    stream = spark.table("bus_candles").where(
+    streaming_complete_candles(spark, src, str(tmp_path),
+                               "120 seconds").awaitTermination(120)
+    stream = read_replay_sink(spark, f"{tmp_path}/candles").select(
+        "key", "window_start", "open_ask", "close_ask", "is_live").where(
         ~F.col("key").startswith("ZZ-"))
 
     rows = demo_tick_rows()

@@ -16,6 +16,7 @@ from data_timeseries_java_spark.streaming import (
     streaming_complete_candles,
     streaming_ohlc_candles,
 )
+from data_timeseries_java_spark.streaming.replay import read_replay_sink
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +60,18 @@ def _run_stream(spark, tick_dir, transform, name):
     return spark.table(name).where(~F.col("key").startswith("ZZ-"))
 
 
+def _run_complete(spark, files, work_dir, universe=None):
+    """Drive the complete-candle stream over ``files`` (one file per
+    micro-batch) into ``work_dir``; its candle sink without the
+    sentinel key."""
+    src = (spark.readStream.schema(TICK_SCHEMA)
+           .option("maxFilesPerTrigger", 1).parquet(files))
+    streaming_complete_candles(spark, src, str(work_dir), "120 seconds",
+                               universe=universe).awaitTermination(120)
+    return read_replay_sink(spark, f"{work_dir}/candles").where(
+        ~F.col("key").startswith("ZZ-"))
+
+
 def test_streaming_candles_match_batch(spark, tick_dir):
     src_batch = (spark.read.schema(TICK_SCHEMA).parquet(f"{tick_dir}/f*")
                  .where(~F.col("key").startswith("ZZ-")))
@@ -83,7 +96,7 @@ def test_streaming_candles_match_batch(spark, tick_dir):
     assert len(s) == 23  # 5 keys x 5 windows minus TS-3/TS-4 gap window
 
 
-def test_streaming_carry_forward_matches_batch(spark, tick_dir):
+def test_streaming_carry_forward_matches_batch(spark, tick_dir, tmp_path):
     from data_timeseries_java_spark.operators import gap_fill
 
     src_batch = (spark.read.schema(TICK_SCHEMA).parquet(f"{tick_dir}/f*")
@@ -95,11 +108,8 @@ def test_streaming_carry_forward_matches_batch(spark, tick_dir):
         F.col("open.ask").alias("open_ask"),
         F.col("close.ask").alias("close_ask"),
     )
-    stream = _run_stream(
-        spark, tick_dir,
-        lambda s: streaming_complete_candles(s, "120 seconds").select(
-            "key", "window_start", "open_ask", "close_ask"),
-        "stream_complete")
+    stream = _run_complete(spark, f"{tick_dir}/f*", tmp_path).select(
+        "key", "window_start", "open_ask", "close_ask")
     b = {tuple(r) for r in batch.collect()}
     s = {tuple(r) for r in stream.collect()}
     assert s == b
@@ -139,15 +149,13 @@ def sparse_tick_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir):
-    """Leading/trailing global gaps: key B must get gap candles in
-    windows where only A ticked — before B's first tick (0.0-price) and
-    after its last (carry-forward) — exactly matching the batch
-    pipeline. Closes the per-key variant's documented divergence."""
+def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir,
+                                                tmp_path):
+    """Leading/trailing global gaps: with the universe passed, key B
+    must get gap candles in windows where only A ticked — before B's
+    first tick (0.0-price) and after its last (carry-forward) — exactly
+    matching the batch pipeline."""
     from data_timeseries_java_spark.operators import gap_fill
-    from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
-    )
 
     src_batch = (spark.read.schema(TICK_SCHEMA)
                  .parquet(f"{sparse_tick_dir}/f*")
@@ -161,15 +169,12 @@ def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir):
         F.col("min_ask.ask").alias("mn"),
         F.col("max_bid.bid").alias("mxb"),
     )
-    stream = _run_stream(
-        spark, sparse_tick_dir,
-        lambda s: streaming_complete_candles_global(
-            s, ["A", "B"], "120 seconds").select(
-            "key", "window_start", "is_live",
-            "open_ask", "close_ask",
-            F.col("min_ask").alias("mn"),
-            F.col("max_bid").alias("mxb")),
-        "stream_global_gapfill")
+    stream = _run_complete(spark, f"{sparse_tick_dir}/f*", tmp_path,
+                           ["A", "B"]).select(
+        "key", "window_start", "is_live",
+        "open_ask", "close_ask",
+        F.col("min_ask").alias("mn"),
+        F.col("max_bid").alias("mxb"))
     b = {tuple(r) for r in batch.collect()}
     s = {tuple(r) for r in stream.collect()}
     assert s == b
@@ -180,13 +185,10 @@ def test_streaming_global_gapfill_matches_batch(spark, sparse_tick_dir):
 def test_streaming_global_gapfill_skips_empty_windows(spark, tmp_path):
     """A window in which NO instrument ticked produces no candles at all
     (batch gap_fill only fills windows some instrument observed) — the
-    marker-mode stateful operator must not fabricate it."""
+    complete-candle stream must not fabricate it."""
     from datetime import datetime, timezone
 
     from data_timeseries_java_spark.operators import gap_fill
-    from data_timeseries_java_spark.streaming.candles_stream import (
-        streaming_complete_candles_global,
-    )
 
     d = str(tmp_path)
     t = lambda m, s=0: datetime(2016, 5, 1, 0, m, s, tzinfo=timezone.utc)
@@ -205,17 +207,10 @@ def test_streaming_global_gapfill_skips_empty_windows(spark, tmp_path):
         for p in _glob.glob(f"{d}/h{i}/*"):
             _os.utime(p, (base + i * 10, base + i * 10))
 
-    src = (spark.readStream.schema(TICK_SCHEMA)
-           .option("maxFilesPerTrigger", 1).parquet(f"{d}/h*"))
-    out = streaming_complete_candles_global(
-        src, ["A", "B"], "120 seconds").select(
+    stream = _run_complete(spark, f"{d}/h*", f"{d}/work",
+                           ["A", "B"]).select(
         "key", "window_start", "is_live",
         "open_ask", "close_ask")
-    q = (out.writeStream.format("memory").queryName("stream_empty_win")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    stream = spark.table("stream_empty_win").where(
-        ~F.col("key").startswith("ZZ-"))
 
     src_batch = (spark.read.schema(TICK_SCHEMA).parquet(f"{d}/h*")
                  .where(~F.col("key").startswith("ZZ-")))

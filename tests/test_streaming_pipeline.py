@@ -157,14 +157,10 @@ def test_streaming_correlations_sparse_feed_matches_batch(spark,
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_restarts_mid_candle_match_batch_with_default_watermark(spark):
-    """The stream's restart pattern: one availableNow run per file, each
-    resuming from the checkpoint, with the files cut mid-candle. With
-    the default watermark (0 seconds) and the universe passed, every
-    window the final watermark has closed matches batch. A candle stage
-    that advanced the watermark to a window's end when it saw the
-    window open dropped the ticks the next file brought for the candle
-    straddling the cut."""
+def _restart_feed():
+    """Four instruments ticking every 7 s for 40 minutes, and the
+    bounds of four files cut mid-candle (at minute 9:50, 19:50,
+    29:50): (keys, rows, bounds)."""
     import random
     from datetime import datetime, timedelta, timezone
 
@@ -179,22 +175,41 @@ def test_restarts_mid_candle_match_batch_with_default_watermark(spark):
             rows.append((k, t0 + timedelta(seconds=7 * i), px[k],
                          px[k] + 0.001, True))
     cuts = [t0 + timedelta(minutes=m, seconds=50) for m in (9, 19, 29)]
-    bounds = [t0] + cuts + [t0 + timedelta(hours=1)]
+    return keys, rows, [t0] + cuts + [t0 + timedelta(hours=1)]
 
+
+def _run_per_file(spark, d, rows, bounds, start):
+    """Write ``rows`` as one file per pair of ``bounds`` and, after each
+    file lands, run ``start(src)`` (an availableNow query over every
+    file so far, resuming from its checkpoint) to its end; the runs."""
+    runs = []
+    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        chunk = [r for r in rows if lo <= r[1] < hi]
+        spark.createDataFrame(chunk, TICK_SCHEMA).coalesce(1).write \
+            .parquet(f"{d}/in/f{i}")
+        q = start(spark.readStream.schema(TICK_SCHEMA).parquet(f"{d}/in/f*"))
+        q.awaitTermination(180)
+        assert q.exception() is None
+        runs.append(q)
+    return runs
+
+
+def test_restarts_mid_candle_match_batch_with_default_watermark(spark):
+    """The stream's restart pattern: one availableNow run per file, each
+    resuming from the checkpoint, with the files cut mid-candle. With
+    the default watermark (0 seconds) and the universe passed, every
+    window the final watermark has closed matches batch. A candle stage
+    that advanced the watermark to a window's end when it saw the
+    window open dropped the ticks the next file brought for the candle
+    straddling the cut."""
+    keys, rows, bounds = _restart_feed()
     d = tempfile.mkdtemp(prefix="spipe_restart_")
     try:
-        runs = []
-        for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
-            chunk = [r for r in rows if lo <= r[1] < hi]
-            spark.createDataFrame(chunk, TICK_SCHEMA).coalesce(1).write \
-                .parquet(f"{d}/in/f{i}")
-            src = spark.readStream.schema(TICK_SCHEMA).parquet(f"{d}/in/f*")
-            q = streaming_correlations(spark, src, f"{d}/out",
-                                       resolution="120 seconds", config=CFG,
-                                       universe=keys)
-            q.awaitTermination(180)
-            assert q.exception() is None
-            runs.append(q)
+        runs = _run_per_file(
+            spark, d, rows, bounds,
+            lambda src: streaming_correlations(
+                spark, src, f"{d}/out", resolution="120 seconds",
+                config=CFG, universe=keys))
         closed_ms = _closed_ms(runs)
 
         got = {(r.w_start_ms, r.key1, r.key2): round(r.value, 9)
@@ -208,11 +223,86 @@ def test_restarts_mid_candle_match_batch_with_default_watermark(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_trigger_path_starts_no_python_worker(spark, monkeypatch):
-    """Every trigger runs in the JVM: the candle stage is a window
-    aggregate (no ``applyInPandasWithState`` or ``mapInPandas`` node in
-    the micro-batch plan), and ``foreachBatch`` turns its driver-side
-    lists into literals, not ``createDataFrame`` rows."""
+def test_candle_stream_restarts_mid_candle_match_batch(spark):
+    """The complete-candle stream under the same restart pattern: one
+    availableNow run per file cut mid-candle, the default watermark and
+    the universe passed. Its sink holds exactly the candles the final
+    watermark has closed, equal to batch ``candles_pipeline``'s, open
+    and close times and bids included. A candle stage that advanced the
+    watermark to a window's end when it saw the window open dropped the
+    ticks the next file brought for the candle straddling the cut."""
+    from data_timeseries_java_spark.streaming import (
+        streaming_complete_candles,
+    )
+    from data_timeseries_java_spark.streaming.replay import read_replay_sink
+
+    keys, rows, bounds = _restart_feed()
+    d = tempfile.mkdtemp(prefix="scandles_restart_")
+    try:
+        runs = _run_per_file(
+            spark, d, rows, bounds,
+            lambda src: streaming_complete_candles(
+                spark, src, d, "120 seconds", universe=keys))
+        closed_ms = _closed_ms(runs)
+
+        def flat(df, price):
+            return {tuple(r) for r in df.select(
+                "key", F.unix_millis("window_start"), "is_live",
+                *[F.unix_millis(f"{c}_time") for c in ("open", "close")],
+                *[F.round(c, 9) for c in (
+                    "open_bid", "open_ask", "close_bid", "close_ask")],
+                *[F.round(price(c), 9) for c in (
+                    "min_ask", "max_ask", "min_bid", "max_bid")])
+                .collect()}
+
+        ticks = spark.createDataFrame(rows, TICK_SCHEMA)
+        batch = candles_pipeline(ticks, ticks.select("key").distinct(),
+                                 "120 seconds").where(
+            F.unix_millis("window_end") <= closed_ms)
+        batch = batch.select("*", *[
+            F.col(f"{c}.{p}").alias(f"{c}_{p}")
+            for c in ("open", "close") for p in ("time", "bid", "ask")])
+        got = flat(read_replay_sink(spark, f"{d}/candles"), F.col)
+        want = flat(batch, lambda c: F.col(f"{c}.{c[4:]}"))
+        assert len(want) == 4 * 19
+        assert got == want
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _start_candles(spark, src, out):
+    from data_timeseries_java_spark.streaming import (
+        streaming_complete_candles,
+    )
+
+    return streaming_complete_candles(spark, src, out, "120 seconds",
+                                      universe=["A", "B", "C"])
+
+
+def _read_candles(spark, out):
+    from data_timeseries_java_spark.streaming.replay import read_replay_sink
+
+    return read_replay_sink(spark, f"{out}/candles")
+
+
+# name → (start the stream over src into out, read out back)
+_ENTRY_POINTS = {
+    "correlations": (
+        lambda spark, src, out: streaming_correlations(
+            spark, src, out, resolution="120 seconds", config=CFG,
+            universe=["A", "B", "C"]),
+        read_streaming_correlations),
+    "candles": (_start_candles, _read_candles),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_ENTRY_POINTS))
+def test_trigger_path_starts_no_python_worker(spark, monkeypatch, entry):
+    """Every trigger of either stream runs in the JVM: the candle stage
+    is a window aggregate (no ``applyInPandasWithState`` or
+    ``mapInPandas`` node in the micro-batch plan), and ``foreachBatch``
+    turns its driver-side lists into literals, not ``createDataFrame``
+    rows."""
     from datetime import datetime, timedelta, timezone
 
     from pyspark.sql import SparkSession
@@ -234,16 +324,15 @@ def test_trigger_path_starts_no_python_worker(spark, monkeypatch):
         monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
-        q = streaming_correlations(spark, src, f"{d}/out",
-                                   resolution="120 seconds", config=CFG,
-                                   universe=["A", "B", "C"])
+        start, read = _ENTRY_POINTS[entry]
+        q = start(spark, src, f"{d}/out")
         q.awaitTermination(180)
         assert q.exception() is None
         plan = (q._jsq.streamingQuery().lastExecution().executedPlan()
                 .toString())
         assert "StateStoreSave" in plan
         assert "InPandas" not in plan and "PandasWithState" not in plan
-        assert read_streaming_correlations(spark, f"{d}/out").count() > 0
+        assert read(spark, f"{d}/out").count() > 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -319,7 +408,8 @@ def test_seed_partition_walks_down_to_newest_earlier_batch(spark):
     d = tempfile.mkdtemp(prefix="spipe_seed_")
     try:
         returns = f"{d}/returns"
-        assert _seed_partition(spark, returns, 5) is None
+        assert _seed_partition(spark, returns, 5,
+                               _RETURNS_ROW_SCHEMA) is None
         spark.createDataFrame(
             [("A", None, None, 1.0, True)], _RETURNS_ROW_SCHEMA) \
             .coalesce(1).write.parquet(f"{d}/part")
@@ -328,7 +418,8 @@ def test_seed_partition_walks_down_to_newest_earlier_batch(spark):
             shutil.copytree(f"{d}/part", f"{returns}/batch_id={b}")
 
         def seed_id(batch_id):
-            seed = _seed_partition(spark, returns, batch_id)
+            seed = _seed_partition(spark, returns, batch_id,
+                                   _RETURNS_ROW_SCHEMA)
             if seed is None:
                 return None
             (path,) = seed.inputFiles()
@@ -381,6 +472,41 @@ def test_broadcast_membership_matches_batch(spark, monkeypatch):
         want = _batch_map(spark, rows, closed_ms)
         assert len(want) > 0
         assert got == want
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_window_count_guard_fails_batch_before_writing(spark, monkeypatch):
+    """A batch that touches more than ``_MAX_WINDOWS_PER_TRIGGER``
+    sliding windows fails with a ``ValueError`` naming its batch id,
+    and writes no returns partition for that batch."""
+    import os
+    from datetime import datetime, timedelta, timezone
+
+    from pyspark.errors import StreamingQueryException
+
+    from data_timeseries_java_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "_MAX_WINDOWS_PER_TRIGGER", 1)
+    t0 = datetime(2016, 1, 4, 9, 0, tzinfo=timezone.utc)
+    rows = [(k, t0 + timedelta(seconds=30 * i), 1.0 + 0.01 * (i % 7),
+             1.001 + 0.01 * (i % 5), True)
+            for i in range(40) for k in ("A", "B")]
+    d = tempfile.mkdtemp(prefix="spipe_guard_")
+    try:
+        for i in range(2):
+            spark.createDataFrame(rows[i * 40:(i + 1) * 40], TICK_SCHEMA) \
+                .coalesce(1).write.parquet(f"{d}/in/f{i}")
+        src = (spark.readStream.schema(TICK_SCHEMA)
+               .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
+        q = streaming_correlations(spark, src, f"{d}/out",
+                                   resolution="120 seconds", config=CFG,
+                                   universe=["A", "B"])
+        with pytest.raises(StreamingQueryException) as err:
+            q.awaitTermination(180)
+        # batch 0 finalizes nothing; batch 1 closes f0's candles
+        assert "ValueError: batch 1 touches" in str(err.value)
+        assert not os.path.exists(f"{d}/out/returns/batch_id=1")
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

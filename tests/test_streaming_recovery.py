@@ -1,5 +1,5 @@
 """Checkpoint recovery: a restarted streaming query resumes from its
-state store — carry-forward state survives the restart."""
+checkpoint and its sink — carry-forward survives the restart."""
 
 from __future__ import annotations
 
@@ -35,18 +35,14 @@ def test_carry_forward_state_survives_restart(spark, tmp_path):
     def start():
         src = (spark.readStream.schema(TICK_SCHEMA)
                .option("maxFilesPerTrigger", 1).parquet(f"{d}/in/f*"))
-        out = streaming_complete_candles(src, "120 seconds")
-        return (out.writeStream.format("parquet")
-                .option("path", f"{d}/out")
-                .option("checkpointLocation", f"{d}/ckpt")
-                .outputMode("append").trigger(availableNow=True).start())
+        return streaming_complete_candles(spark, src, d, "120 seconds")
 
     q = start()
     q.awaitTermination(120)
 
     # run 2 (fresh query object, same checkpoint): minutes 7 + sentinel.
     # Window [4,6) closes; its open must equal run 1's close (12.0→13.0
-    # chain), proving the keyed state store survived the restart.
+    # chain), proving carry-forward survived the restart.
     _write(spark, f"{d}/in/f2",
            [("K", t(7), 14.0, 14.0, True),
             ("K", datetime(2024, 6, 2, tzinfo=timezone.utc), 1.0, 1.0, True)],
@@ -55,7 +51,7 @@ def test_carry_forward_state_survives_restart(spark, tmp_path):
     q2.awaitTermination(120)
 
     rows = {r.window_start.minute: r for r in
-            spark.read.parquet(f"{d}/out").where(F.col("key") == "K").collect()}
+            spark.read.parquet(f"{d}/candles").where(F.col("key") == "K").collect()}
     assert set(rows) >= {0, 2, 4, 6}
     assert rows[4].open_ask == 12.0   # carried from run 1's last close
     assert rows[4].close_ask == 13.0
