@@ -57,29 +57,16 @@ HEADLINE = [
     # training-data extensions
     "dedup_minhash_lsh",
     "text_quality",
-    "knn_bruteforce",
-    "neardup_cosine",
-    "ann_lsh",
     # composed end-to-end corpus pipeline (fused single-scan plan)
     "corpus_build",
     # real BPE subword tokenization — 64-rule replace chain in one
     # whole-stage-codegen projection, no shuffle (round 7)
     "text_bpe_tokens",
     # round-7 batch 2: recursive MACD + EWMA pair covariance (grouped-map
-    # recursions), SemDeDup clusters, inverted-index TF-IDF pairs,
+    # recursions), inverted-index TF-IDF pairs,
     # Bloom-bitset decontamination, hashed linear classifier
     "fx_macd",
     "fx_ewma_cov",
-    # the explicit exact variant (corpus-trained k-means, brute-force
-    # assignment) — the accuracy companion the flagship routed away from
-    "semantic_dedup_exact",
-    # the SRP-banded linear-assignment variant next to the exact path
-    "semantic_dedup_ann",
-    # the flagship: the unsuffixed name derives BOTH integers from
-    # corpus size (tcs = (25·C·n)^{1/3} snapped to the power-of-two
-    # grid, k = n/tcs, S ∝ k sample training, SRP-banded assignment) —
-    # verify space n·tcs at every scale (round 13)
-    "semantic_dedup",
     # production-vocab dictionary tokenizer (1024 ranks, segmented)
     "text_bpe_tokens_dict",
     "dsir_importance",
@@ -275,12 +262,11 @@ def main() -> None:
 
     n_trials = int(os.environ.get("SPARK_GRAFT_TRIALS", "5"))
     # lanes with measured high trial variance under sandbox contention
-    # (r8 spreads: media_resize 0.70-2.22 s, ann_lsh, fx_pair_spearman)
-    # get extra trials so the median converges; the r8-vs-r7 "regression"
-    # on these three was noise (re-measured quiesced in round 9 — see
+    # (r8 spreads: media_resize 0.70-2.22 s, fx_pair_spearman) get extra
+    # trials so the median converges; the r8-vs-r7 "regression" on these
+    # was noise (re-measured quiesced in round 9 — see
     # PLANS.md §bench-outliers)
-    extra_trials = {"ann_lsh": 4, "fx_pair_spearman": 4,
-                    "media_resize": 4}
+    extra_trials = {"fx_pair_spearman": 4, "media_resize": 4}
     env_before = _env_snapshot()
     medians: dict[str, float] = {}
     detail: dict[str, dict] = {}

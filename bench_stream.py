@@ -229,32 +229,6 @@ def main() -> None:
                                    F.log("ask").alias("value")))
     eval_docs = (load_table(spark, sf_dir, "documents")
                  .limit(50).select("doc_id", "text"))
-    # embeddings replay + offline-trained derived-k centroids for the
-    # streaming SemDeDup gate (round 13)
-    from data_timeseries_java_spark.operators.similarity import (
-        centroid_vectors, kmeans_centroids_fixedk)
-    from data_timeseries_java_spark.plans.materialize import materialize
-    from data_timeseries_java_spark.queries.similarity import (
-        FIXEDK_K, KMEANS_ITERS, SAMPLE_PER_K, SEMDEDUP_T, SRP_BAND_BITS,
-        _srp_signs, derived_tcs)
-    from data_timeseries_java_spark.streaming.semdedup_stream import (
-        streaming_semantic_dedup)
-    emb_static = (load_table(spark, sf_dir, "embeddings")
-                  .select("vec_id", "embedding"))
-    emb_dir = f"{root}/emb"
-    embw = emb_static.withColumn("_f", (F.col("vec_id") % N_FILES) + 1)
-    for i in range(1, N_FILES + 1):
-        (embw.where(F.col("_f") == i).drop("_f").coalesce(1)
-         .write.mode("overwrite").parquet(f"{emb_dir}/f{i:02d}"))
-    emb_schema = spark.read.parquet(f"{emb_dir}/f01").schema
-    emb_src = lambda: (spark.readStream.schema(emb_schema)  # noqa: E731
-                       .option("maxFilesPerTrigger", 1)
-                       .parquet(f"{emb_dir}/f*"))
-    n_emb = emb_static.count()
-    k_emb = max(FIXEDK_K, n_emb // derived_tcs(n_emb))
-    cent_emb = materialize(centroid_vectors(kmeans_centroids_fixedk(
-        emb_static, k=k_emb, sample_size=SAMPLE_PER_K * k_emb,
-        iterations=KMEANS_ITERS)))
     # instrument universe for the global gap-fill of the complete-candle
     # stream and the fx pipeline (events are a SPARSE feed: without it,
     # keys that first tick late lack batch's leading gap candles)
@@ -344,13 +318,6 @@ def main() -> None:
             spark, ev_src(), f"{work}/anomalies")),
         ("neardup_fb", lambda: streaming_neardup(
             spark, doc_src(), f"{work}/neardup")),
-        # round 13: the streaming SemDeDup gate — per-batch SRP
-        # assignment against broadcast offline-trained centroids +
-        # within-cluster cosine verdicts vs the accumulated store
-        ("semdedup_fb", lambda: streaming_semantic_dedup(
-            spark, emb_src(), f"{work}/semdedup", cent_emb,
-            _srp_signs(), threshold=SEMDEDUP_T,
-            band_bits=SRP_BAND_BITS)),
         ("corpus_fb", lambda: streaming_corpus_build(
             spark, doc_src(), eval_docs, f"{work}/corpus")),
         ("cms_topk_fb", lambda: streaming_cms_topk(

@@ -9,8 +9,7 @@ operators cannot express the semantics.
 
 Beyond reference parity it adds the operators a large-scale training-data
 pipeline needs: deduplication (exact / MinHash-LSH / SimHash / n-gram
-Jaccard / embedding cosine), similarity search (brute-force and LSH ANN),
-text analysis (language-ID, quality scoring, token counting,
+Jaccard), text analysis (language-ID, quality scoring, token counting,
 fingerprinting), and a multimodal tier with REAL pure-Python codecs
 (PNG, baseline JPEG, PCM WAV, MJPEG-AVI video) behind Arrow-batched
 decode/resize/feature operators — facades: ``api.FXEngine``,

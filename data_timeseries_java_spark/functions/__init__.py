@@ -1,13 +1,12 @@
 """Scalar/column function library.
 
 hashing  — engine-portable deterministic hashing (md5-hex derived
-           signatures, integer-LCG pseudo-randomness) used by dedup,
-           similarity, and fingerprinting so every operator stays
-           oracle-checkable across engines.
-vectors  — JVM-side vector math over array columns (dot, norm, cosine)
-           via higher-order functions; no Python in the hot path.
+           signatures, integer-LCG pseudo-randomness) used by dedup
+           and fingerprinting so every operator stays oracle-checkable
+           across engines.
 skew     — key-salting helpers for hot-key aggregations and joins.
-stats    — ANSI-posture-independent aggregates (safe_corr).
+stats    — ANSI-posture-independent aggregates (safe_corr) and the
+           floor-to-6-decimals quantizer the oracle-checked lanes share.
 """
 
 from data_timeseries_java_spark.functions.hashing import (
@@ -17,15 +16,11 @@ from data_timeseries_java_spark.functions.hashing import (
 )
 from data_timeseries_java_spark.functions.skew import salted_sum
 from data_timeseries_java_spark.functions.stats import safe_corr
-from data_timeseries_java_spark.functions.vectors import cosine, dot, norm
 
 __all__ = [
     "md5_min_signature",
     "md5_band_bucket",
     "lcg_uniform",
-    "dot",
-    "norm",
-    "cosine",
     "salted_sum",
     "safe_corr",
 ]

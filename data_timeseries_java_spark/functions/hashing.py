@@ -3,7 +3,7 @@
 Everything here reproduces bit-exactly in any SQL engine with md5() and
 64-bit integer arithmetic — deliberately avoiding Spark-specific hashes
 (xxhash64/murmur) and float transcendentals, so the DuckDB oracle tier
-can mirror each derivation (see queries/dedup.py, queries/similarity.py).
+can mirror each derivation (see queries/dedup.py).
 """
 
 from __future__ import annotations

@@ -60,3 +60,11 @@ def safe_corr(x: ColumnOrName, y: ColumnOrName) -> Column:
         return F.corr(x, y)
     return F.try_divide(F.covar_samp(x, y),
                         F.stddev_samp(x) * F.stddev_samp(y))
+
+
+def _floor6(c: Column) -> Column:
+    """Quantize to 6 decimals by flooring. Ratios of integers/decimal
+    data land EXACTLY on round-half boundaries (denominators with only
+    2/5 prime factors), where engines' round implementations disagree
+    on the same double; floor of an identical double never does."""
+    return F.floor(c * 1_000_000) / 1_000_000

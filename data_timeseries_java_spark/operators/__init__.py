@@ -6,8 +6,7 @@ FX time-series pipeline (reference parity, SURVEY.md §2):
   correlation — sliding-window pairwise Pearson correlation
 
 Training-data pipeline extensions:
-  dedup       — exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding
-  similarity  — brute-force + LSH approximate nearest neighbors
+  dedup       — exact / MinHash-LSH / SimHash / n-gram-Jaccard
   text        — language-ID, quality scoring, token counts, fingerprints
   multimodal  — opaque binary columns with typed metadata
 """

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_timeseries_java_spark.operators.text import _floor6, tokens
+from data_timeseries_java_spark.functions.stats import _floor6
+from data_timeseries_java_spark.operators.text import tokens
 from data_timeseries_java_spark.plans.materialize import materialize
 
 DEFAULT_NUM_HASHES = 16

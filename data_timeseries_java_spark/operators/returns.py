@@ -42,7 +42,7 @@ def cusum_changepoints(points: DataFrame, key_col: str = "key",
     d = points.withColumn("_p", p)
     s_pos = F.col("_p") - F.min("_p").over(w)
     s_neg = F.max("_p").over(w) - F.col("_p")
-    from data_timeseries_java_spark.operators.text import _floor6
+    from data_timeseries_java_spark.functions.stats import _floor6
     out = d.select(
         key_col,
         F.col(time_col),

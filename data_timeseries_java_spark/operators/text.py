@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_timeseries_java_spark.functions.stats import _floor6
+
 # Tiny per-language stopword lexicons for the n-gram/stopword language-ID
 # heuristic. Deliberately small: the heuristic is the operator; real
 # deployments swap in bigger lexicons.
@@ -31,15 +33,6 @@ STOPWORDS = sorted({w for ws in LANG_LEXICONS.values() for w in ws})
 
 # BPE-ish pretokenizer: letter runs, digit runs, single punctuation.
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _floor6(c: Column) -> Column:
-    """Quantize to 6 decimals by flooring. Ratios of integers/decimal
-    data land EXACTLY on round-half boundaries (denominators with only
-    2/5 prime factors, e.g. a 512-char doc), where engines' round
-    implementations disagree on the same double; floor of an identical
-    double never does."""
-    return F.floor(c * 1_000_000) / 1_000_000
 
 
 def tokens(text: Column) -> Column:
@@ -889,6 +882,17 @@ def _dsir_score(df: DataFrame, gb: DataFrame, w: DataFrame,
                     (lw > 0).alias("kept")))
 
 
+SCRAMBLE_MULT = 2654435761
+SCRAMBLE_PRIME = 2147483647
+
+
+def scramble(col: Column) -> Column:
+    """Deterministic pseudo-random BIGINT rank for an id column —
+    pure integer arithmetic, bit-identical in Spark and DuckDB."""
+    return F.pmod(F.pmod(col.cast("long"), F.lit(SCRAMBLE_PRIME))
+                  * F.lit(SCRAMBLE_MULT), F.lit(SCRAMBLE_PRIME))
+
+
 def dsir_resample(scored: DataFrame, n_keep: int = 100,
                   id_col: str = "doc_id") -> DataFrame:
     """The DSIR paper's actual selection step — Gumbel top-k sampling
@@ -903,11 +907,6 @@ def dsir_resample(scored: DataFrame, n_keep: int = 100,
     tiny driver merge) — never a global sort of the corpus. The Gumbel
     key is rounded to 9 before ranking (cross-engine ln guard) with an
     id tie-break, so the selected set is deterministic."""
-    from data_timeseries_java_spark.operators.similarity import (
-        SCRAMBLE_PRIME,
-        scramble,
-    )
-
     u = (scramble(F.col(id_col)) + 1.0) / (SCRAMBLE_PRIME + 1.0)
     key = F.round(F.col("log_weight") - F.log(-F.log(u)), 9)
     return (scored.select(id_col, "is_target", "log_weight",

@@ -1,9 +1,9 @@
 """Cache-lifetime policy hook: how multi-consumer subtrees materialize.
 
 Several builders (``pairwise_correlations``, ``pairwise_regression``,
-``lead_lag_correlation``, ``minhash_lsh_dedup``, ``ann_lsh_topk``) feed
-one expensive subtree to 2-3 consumers whose differing column pruning
-defeats Catalyst exchange reuse, so they materialize it once. The
+``lead_lag_correlation``, ``minhash_lsh_dedup``) feed one expensive
+subtree to 2-3 consumers whose differing column pruning defeats
+Catalyst exchange reuse, so they materialize it once. The
 boolean ``cache_input=`` / ``cache_plan=`` flags say WHETHER to
 materialize; this module's policy says HOW — ``cache()`` by default,
 swappable for ``persist(StorageLevel)`` / ``checkpoint()`` /
@@ -120,20 +120,6 @@ def materialization(policy: MaterializePolicy) -> Iterator[MaterializePolicy]:
 def active_policy() -> Optional[MaterializePolicy]:
     """The innermost installed policy, or None outside any scope."""
     return _STACK[-1] if _STACK else None
-
-
-# NOTE (round 15, negative result worth keeping): a lineage_barrier()
-# helper built on LAZY localCheckpoint(eager=False) was tried for the
-# unrolled k-means tree (927 KB formatted plan) and REVERTED — under
-# AQE even the lazy form finalizes the subtree's query stages when the
-# RDD is materialized at build, submitting corpus-scale jobs at
-# plan-build time and breaking the engine's build-runs-no-jobs
-# contract (caught by test_building_queries_runs_no_jobs). The fix
-# that shipped is structural: reference the previous iteration's frame
-# once (window-folded centroid norm, operators/similarity.py), which
-# keeps plan growth linear with no barrier at all. cache() cannot do
-# the truncation job either — it registers the subtree but the
-# DataFrame keeps its full lineage, so analysis cost is unchanged.
 
 
 def materialize(df: DataFrame, want: bool = True) -> DataFrame:

@@ -28,13 +28,12 @@ from data_timeseries_java_spark.queries import (
     relational,
     relational_ext,
     scale,
-    similarity,
     text,
     tpch_hard,
 )
 
 _MODULES = [fx, relational, relational_ext, tpch_hard, dedup, text,
-            similarity, multimodal, corpus, scale]
+            multimodal, corpus, scale]
 
 
 def _registry_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

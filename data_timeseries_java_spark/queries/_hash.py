@@ -15,9 +15,9 @@ The hash covers, per query:
   module's MODULE-LEVEL imports and (b) the import statements inside
   the query function's own body (deferred imports — the house style
   for heavy deps). Seeding per-function instead of per-module keeps
-  the blast radius honest: an edit to ``operators/similarity.py``
-  should re-sample the similarity lanes, not every fx lane whose
-  module happens to host one query that touches a text operator.
+  the blast radius honest: an edit to ``operators/bars.py`` should
+  re-sample the bar lanes, not every lane whose module happens to
+  host one query that touches a bar operator.
 - exclusions: the ``queries`` subpackage itself (one query module
   hosts many lanes — per-lane function source + the oracle string,
   which has any shared SQL prelude already expanded into it, cover
@@ -163,15 +163,15 @@ def _closure_from(seeds) -> tuple[str, ...]:
       the hub pulls in.
     - Expansion follows MODULE-LEVEL imports only. Function-local
       deferred imports inside an operator module serve one specific
-      operator (e.g. ``returns.cusum`` borrows ``text._floor6``), and
+      operator (e.g. ``returns.cusum`` borrows ``stats._floor6``), and
       following them fuses unrelated families — measured: a one-line
-      ``operators/similarity.py`` edit un-gated all 150 fx lanes via
-      the returns→text→similarity deferred chain, flooding the
+      edit to a lane module un-gated all 150 fx lanes via a deferred
+      chain through ``returns``, flooding the
       driver's 50-lane sample for three rounds. The cost is that a
       lane whose operator uses such a borrowed helper is not
       re-sampled when ONLY the helper's home module changes — a
       deliberate under-approximation, backstopped by the local
-      298-lane oracle sweep that runs in full every session
+      oracle sweep that runs in full every session
       (tests/test_oracle.py). Lane-specific deferred imports at the
       QUERY layer do count: impl_hash seeds from the query function's
       own body with a full walk.

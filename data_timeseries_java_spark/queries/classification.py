@@ -13,28 +13,19 @@ every name in the live registry is classified, so a new query cannot
 ship unadjudicated — and that every baseline's scale-path pointers
 resolve to declared queries.
 
-Round-11 lesson (why this module exists): the unsuffixed
-``semantic_dedup`` spent two rounds routing to a pinned-k path whose
-within-cluster verify space was n²/k — correct and fast at the oracle
-SFs, a 17-minute kill at the 100x decade. The default name is the one
-a user reaches for; it must be the one that scales. Round 12 made the
-flagship derive k from corpus size and codified the rule here.
+Why this module exists: the default name is the one a user reaches
+for; it must be the one that scales. A lane that routes an unsuffixed
+name to a quadratic path passes at the oracle SFs and dies at the 100x
+decade, so every such lane is adjudicated here by name.
 
-Adjudications under the invariant (VERDICT #4 asked for these two by
-name):
+Adjudication under the invariant:
 
-- ``neardup_cosine`` / ``neardup_cosine_auto``: within-label ALL-PAIRS
-  cosine — Σ block² with block size ∝ n (498 s at the 100x decade,
-  measured round 11). Kept under their historical names as the
-  ground-truth control that ann_recall_eval and the LSH lanes are
-  graded against; renaming would break the r01-r11 correctness/bench
-  artifact continuity keyed by these names, so the machine-readable
-  tag here is the declared mechanism (the invariant's stated
-  alternative to a suffix). Their docstrings and SCALE.md carry the
-  same adjudication.
 - ``dedup_ngram_jaccard``: exact n-gram-intersection join — the
-  intersection-size control for the MinHash estimate. Same
-  continuity reasoning; scale path is dedup_minhash_lsh.
+  intersection-size control for the MinHash estimate. Kept under its
+  historical name because renaming would break the r01-r11
+  correctness/bench artifact continuity keyed by it, so the
+  machine-readable tag here is the declared mechanism (the invariant's
+  stated alternative to a suffix); scale path is dedup_minhash_lsh.
 """
 
 from __future__ import annotations
@@ -42,36 +33,10 @@ from __future__ import annotations
 # name -> (why it is super-linear by design, tuple of scale-path names
 # a production user should reach instead)
 DECLARED_BASELINES: dict[str, tuple[str, tuple[str, ...]]] = {
-    "knn_bruteforce": (
-        "exact top-k over the full corpus per query — the ANN "
-        "ground truth (linear in n for a bounded query set, but the "
-        "constant is the whole corpus per query)",
-        ("ann_lsh", "ann_ivf", "ann_ivf_trained")),
-    "neardup_cosine": (
-        "within-label all-pairs cosine (Σ block², block ∝ n) — "
-        "brute-force near-dup ground truth",
-        ("ann_lsh", "tfidf_neardup", "semantic_dedup")),
-    "neardup_cosine_auto": (
-        "same all-pairs semantics through the measured pandas/BLAS "
-        "kernel dispatcher",
-        ("ann_lsh", "tfidf_neardup", "semantic_dedup")),
     "dedup_ngram_jaccard": (
         "exact n-gram intersection join — the intersection-size "
         "control the MinHash estimate is graded against",
         ("dedup_minhash_lsh",)),
-    "semantic_dedup_exact": (
-        "corpus-trained k-means (k ~ n trainer, O(n·k·d)/iteration) "
-        "+ exact nearest-centroid assignment — the accuracy companion",
-        ("semantic_dedup",)),
-    "semantic_dedup_fixedk": (
-        "pinned k ⇒ within-cluster verify space n²/k — the "
-        "constant-cost small-corpus variant (killed at the 100x "
-        "decade; round-11 VERDICT)",
-        ("semantic_dedup",)),
-    "semantic_dedup_ann": (
-        "k ~ n corpus-trained centroids (quadratic TRAINER term) "
-        "with linear SRP assignment — the trainer-cost companion",
-        ("semantic_dedup",)),
 }
 
 

@@ -1535,7 +1535,7 @@ def q_fx_spread_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ask = F.col("value") * F.lit(1.0001)
     spread = ask - bid
     rel = spread / ((ask + bid) / F.lit(2.0))
-    from data_timeseries_java_spark.operators.text import _floor6
+    from data_timeseries_java_spark.functions.stats import _floor6
     g = (ev.select(
             F.col("event_type").alias("key"),
             (F.floor(F.unix_millis("ts") / RES_MS) * RES_MS)

@@ -822,7 +822,7 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     size window over the 5x24 profile grid."""
     from pyspark.sql import Window
 
-    from data_timeseries_java_spark.operators.text import _floor6
+    from data_timeseries_java_spark.functions.stats import _floor6
 
     ev = load_table(spark, sf_dir, "events")
     g = (ev.groupBy("event_type", F.hour("ts").alias("hour"))
@@ -871,7 +871,7 @@ def q_event_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve both passes."""
     from pyspark.sql import Window
 
-    from data_timeseries_java_spark.operators.text import _floor6
+    from data_timeseries_java_spark.functions.stats import _floor6
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")
@@ -1125,7 +1125,7 @@ def q_event_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning — one shuffle serves the bounds and the clip."""
     from pyspark.sql import Window
 
-    from data_timeseries_java_spark.operators.text import _floor6
+    from data_timeseries_java_spark.functions.stats import _floor6
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type")

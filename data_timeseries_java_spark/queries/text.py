@@ -643,7 +643,8 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetitive/boilerplate docs (complements the Gopher repetition
     ratios); H = 0 for single-token docs, ln(n) for all-distinct.
     One scan, two hash aggregations on the doc key."""
-    from data_timeseries_java_spark.operators.text import _floor6, tokens
+    from data_timeseries_java_spark.functions.stats import _floor6
+    from data_timeseries_java_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id",

@@ -40,7 +40,6 @@ from data_timeseries_java_spark.streaming.dedup_stream import (
     streaming_dedup_exact,
 )
 from data_timeseries_java_spark.streaming.ema_stream import (
-    streaming_ema,
     streaming_ema_applyinpandas,
     streaming_garch,
     streaming_holt,
@@ -77,7 +76,7 @@ __all__ = ["streaming_ohlc_candles", "streaming_complete_candles",
            "sessionize", "streaming_sessions", "streaming_neardup",
            "streaming_corpus_build", "streaming_anomalies",
            "streaming_dedup_exact", "streaming_dedup_content",
-           "streaming_ema", "streaming_ema_applyinpandas",
+           "streaming_ema_applyinpandas",
            "streaming_holt", "streaming_kalman", "streaming_garch",
            "streaming_macd",
            "streaming_correlations", "read_streaming_correlations",

@@ -1,40 +1,20 @@
-"""Streaming EMA via transformWithStateInPandas (Spark 4's typed state
-API — ValueState instead of the applyInPandasWithState tuple blob).
+"""Per-key recursive series streams (EMA, Holt, Kalman, GARCH, MACD)
+on ``applyInPandasWithState``.
 
-Demonstrates the modern stateful-processor surface on a genuinely
-recursive operator: per key, a ValueState row holds the running EMA;
-each micro-batch folds its rows in event-time order and emits the
-updated series. For sources that interleave a key's rows out of order
-ACROSS micro-batches, `streaming/reorder.reordered_ema` runs the same
+Each operator holds its recursion's running state per key; each
+micro-batch folds its rows in event-time order and emits the updated
+series. For sources that interleave a key's rows out of order ACROSS
+micro-batches, `streaming/reorder.reordered_ema` runs the same
 recursion behind a watermark-buffered reorder stage (pinned by the
 `ema_ooo_stream_replay` driver gate).
-Order caveat for the plain folds here (inherent to EMA, not the API):
-rows are folded in event-time order within a batch, and batches are assumed
-ordered per key — the same contract as the candle carry-forward
-operator; guard upstream with a watermark.
-
-Environment note: transformWithStateInPandas's driver worker imports
-``google.protobuf``; ``state_api_available()`` gates on that at runtime
-and ``streaming_ema`` raises a directed RuntimeError up front instead of
-failing deep inside query initialization. The ``applyInPandasWithState``
-operators (candles_stream.py) have no such dependency and are the
-engine's production stateful path; the test suite asserts BOTH contracts
-(the real pipeline when protobuf is present, the gate when absent).
+Order caveat for the plain folds here (inherent to the recursions):
+rows are folded in event-time order within a batch, and batches are
+assumed ordered per key; guard upstream with a watermark.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def state_api_available() -> bool:
-    """True when the typed-state API's python dependency (protobuf) is
-    importable — transformWithStateInPandas cannot initialize without it."""
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
 
 EMA_OUT_SCHEMA = "key string, event_time timestamp, price double, ema double"
 _STATE_SCHEMA = "ema double"
@@ -69,61 +49,10 @@ def _ema_batch(pdf, prev: float | None, alpha: float, price_col: str, key):
     return out, new_prev
 
 
-def streaming_ema(ticks: DataFrame, alpha: float = 0.2,
-                  price_col: str = "ask",
-                  watermark: str = "0 seconds") -> DataFrame:
-    """Per-key streaming EMA over tick prices (ema_0 = first price).
-
-    Raises RuntimeError when the typed-state API's protobuf dependency
-    is missing — callers in such environments use
-    :func:`streaming_ema_applyinpandas` (identical semantics).
-    """
-    if not state_api_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf, which "
-            "is not importable here; use streaming_ema_applyinpandas for "
-            "the same EMA semantics on the dependency-free state API")
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class EmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ema", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            from data_timeseries_java_spark.streaming.foldutil import (
-                whole_batch,
-            )
-            (k,) = key
-            prev = self._state.get()[0] if self._state.exists() else None
-            # Whole-batch concat before the fold: a key's rows can
-            # straddle Arrow chunks out of time order (foldutil docs).
-            pdf = whole_batch(rows, "event_time")
-            if pdf is not None:
-                out, prev = _ema_batch(pdf, prev, alpha, price_col, k)
-                yield out
-            if prev is not None:
-                self._state.update((prev,))
-
-        def close(self) -> None:
-            pass
-
-    return (ticks
-            .withWatermark("event_time", watermark)
-            .groupBy("key")
-            .transformWithStateInPandas(
-                EmaProcessor(), EMA_OUT_SCHEMA, "Append", "EventTime"))
-
-
 def streaming_ema_applyinpandas(ticks: DataFrame, alpha: float = 0.2,
                                 price_col: str = "ask",
                                 watermark: str = "0 seconds") -> DataFrame:
-    """Same operator on applyInPandasWithState (no protobuf dependency —
-    runs in this environment; used by the test suite as the executable
-    streaming-EMA path)."""
+    """Per-key streaming EMA over tick prices (ema_0 = first price)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

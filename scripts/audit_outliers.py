@@ -36,7 +36,6 @@ FAMILIES = {
     "relational_ext": ["relational_ext"],
     "dedup": ["dedup"],
     "text": ["text"],
-    "similarity": ["similarity"],
     "corpus": ["corpus"],
     "sketch": ["scale"],
     "multimodal": ["multimodal"],
@@ -45,32 +44,10 @@ FAMILIES = {
 # Lanes whose super-linear decade behavior is already root-caused and
 # documented (SCALE.md section named per lane). They are SKIPPED, not
 # timed: each is a deliberate exact/brute-force companion whose cost at
-# the 100x replica decade is quadratic by construction (semdedup_exact
-# was measured at 38x-per-decade in round 8 and killed at 100x;
-# neardup_cosine's within-label all-pairs Gram ran 498s this round) —
-# re-measuring them every audit would spend hours re-proving a
-# documented design decision.
-DOCUMENTED = {
-    # corpus-trained SemDeDup: the honest quadratic, kept under its
-    # explicit _exact/_fixedk names (SCALE.md §semdedup-at-scale); the
-    # flagship semantic_dedup routes to the flat fixed-k path.
-    "semantic_dedup_exact": "semdedup-at-scale",
-    "semantic_dedup_fixedk": "semdedup-at-scale (pinned k: pair space n^2/k)",
-    # the flagship routes to the SAME fixed-k path: training flat, SRP
-    # NOTE (round 12): the unsuffixed flagship semantic_dedup is NOT
-    # here anymore — it derives k ~ n/derived_tcs(n) (verify
-    # space ≈ n·TCS, linear) and is timed like every other lane.
-    # trains k-means with k ∝ n by design — the oracle-identical exact
-    # companion; production trains fixed-k on a bounded sample
-    # (SCALE.md §semdedup-training)
-    "semantic_dedup_ann": "semdedup-training (k ∝ n companion)",
-    # within-label ALL-PAIRS cosine >= t — the declared brute-force
-    # near-dup baseline (block size grows with the corpus => Σ block²);
-    # the scale paths are the banded/bucketed lanes (semantic_dedup,
-    # ann_lsh, tfidf_neardup). Measured 498s at 100x, round 11.
-    "neardup_cosine": "outlier-audit (brute-force baseline, Σ block²)",
-    "neardup_cosine_auto": "outlier-audit (same semantics, dispatcher)",
-}
+# the 100x replica decade is quadratic by construction — re-measuring
+# them every audit would spend hours re-proving a documented design
+# decision. None is listed at present.
+DOCUMENTED: dict[str, str] = {}
 
 
 def lanes_by_family() -> dict[str, list[str]]:

@@ -55,8 +55,7 @@ FAMILIES: dict[str, list[str]] = {
              "macd_state", "vwap_state", "tick_bars_state", "scd2_state",
              "reordered_ema_state"],
     # keyed dedup state (seen-key / seen-hash maps under a TTL)
-    "dedup": ["dedup_exact", "dedup_content", "neardup_fb",
-              "semdedup_fb"],
+    "dedup": ["dedup_exact", "dedup_content", "neardup_fb"],
     # ordered per-key buffers with watermark trimming
     "asof": ["asof_join_state", "asof_join_wide_state",
              "asof_join_wide_bucketed"],
@@ -109,27 +108,6 @@ DOCUMENTED: dict[str, str] = {
     # gram build). Inherent pipeline depth, not growth.
     "corpus_fb": "streaming-outlier-audit round-13 (full corpus-build "
                  "pipeline per trigger; decon join ∝ batch tokens)",
-    # 3.8x the dedup family median at the r13 10x audit (7,392 ms —
-    # under the 5x flag, documented preemptively since family medians
-    # move as lanes are added): per trigger this lane runs the FULL
-    # SemDeDup verdict chain — SRP band + rank assignment of the batch
-    # against k~n/tcs broadcast centroids, an embedding-store append,
-    # a store re-scan, and the within-cluster cosine verify join. The
-    # per-batch plan is ~4 Spark jobs; at the audit's 2,500-vector
-    # batches the wall is plan/shuffle overhead, not data (late/early
-    # 1.03 — flat while the store grew 8x). The production bound named
-    # here in r13 is now BUILT (round-14, VERDICT r13 #4): the store is
-    # partitioned by centroid bucket and the per-trigger read prunes to
-    # the batch's touched buckets via a zero-job driver listing
-    # (streaming/semdedup_stream.py). Measured both regimes: the
-    # audit's UNIFORM replay touches every bucket, so its median stays
-    # ~flat (7,704 ms r14 vs 7,392 r13 — prune inert by construction);
-    # the KEYED replay where the bound applies measures 7,239 vs 8,066
-    # ms median pruned-vs-not with identical verdict sinks
-    # (scripts/bench_semdedup_store_prune.py, SCALE.md round-14).
-    "semdedup_fb": "streaming-outlier-audit round-13/14 (full SemDeDup "
-                   "chain per trigger; store re-scan bucket-pruned, "
-                   "inert only under uniform replay)",
 }
 
 

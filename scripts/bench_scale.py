@@ -13,33 +13,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-QUERIES = ["dedup_minhash_lsh", "corpus_build", "ann_lsh",
+QUERIES = ["dedup_minhash_lsh", "corpus_build",
            "fx_pair_correlation", "fx_corr_wide",
            # round-6 additions: the new text/dedup operators' decades
            "text_winnowing", "text_bigram_lm", "dedup_segments_cdc",
            "fx_cusum",
            # round-7 batch 2 additions
-           # semantic_dedup_exact is the corpus-trained quadratic,
-           # measured honestly under its explicit name (the unsuffixed
-           # flagship routes to the flat fixed-k path since round 9)
-           "semantic_dedup_exact", "tfidf_neardup", "decontaminate_bloom",
-           "quality_classifier", "semantic_dedup_ann",
+           "tfidf_neardup", "decontaminate_bloom", "quality_classifier",
            # round-7 batch 3 additions (fact tables replicate from r8:
            # lineitem/orders grow with the decade, dims stay fixed)
            "fx_pair_spearman", "weighted_median_price",
            "region_nation_share", "rolling_distinct_users",
            "brand_triangles",
-           # round-8 additions. semantic_dedup_fixedk is NOT here by
-           # design: its k is pinned (oracle determinism), so cluster
-           # size — and the verdict pair space, n²/k — grows with the
-           # replica decade; the linearity claim it makes is about
-           # TRAINING, which bench_semdedup_train.py isolates and
-           # measures flat.
-           # round 12: the unsuffixed flagship now IS the production
-           # posture — k derived ~ n/derived_tcs(n) (round 13: tcs from
-           # the throughput-weighted balance rule), S ∝ k sample
-           # training, SRP assignment — so it joins the decade table.
-           "semantic_dedup",
+           # round-8 additions
            "text_bpe_tokens_dict", "dsir_importance",
            "dedup_substring_spans", "brand_triangles_deg",
            # round-8 session-2 additions: event-driven bars (per-key
@@ -66,10 +52,9 @@ QUERIES = ["dedup_minhash_lsh", "corpus_build", "ann_lsh",
            # round-9 batch 2: change-log SCD2 + snapshot diff (events
            # replicate), q18/q10 (lineitem/orders replicate), rank-sum
            # AUC (documents replicate), WOE/IV (dims fixed — flat
-           # control), Matryoshka recall (embeddings replicate)
+           # control)
            "scd2_history", "snapshot_diff", "large_volume_customers",
            "returned_item_report", "classifier_auc", "feature_woe_iv",
-           "ann_truncation_recall",
            # round-9 batch 3
            "ship_lag_quantiles", "cohort_ltv", "fx_hourly_seasonality",
            "fx_mean_correlation", "user_event_entropy",
@@ -80,13 +65,8 @@ QUERIES = ["dedup_minhash_lsh", "corpus_build", "ann_lsh",
            "tpch_q21", "order_priority_check", "text_repetition",
            "text_novelty",
            # round 13: the hashed-shingle prefix-filter join — decades
-           # re-measured after the verify stream moved to int64 keys —
-           # and the two-stage retrieve->rerank serving path (broadcast
-           # queries; stage-2 cost bounded by |Q| * retrieve_n)
-           "jaccard_prefix_join", "ann_rerank",
-           # round 14: two-level IVF serving shape (constant coarse
-           # table + probed-cell fine scoring; corpus side unchanged)
-           "ann_ivf_two_level"]
+           # re-measured after the verify stream moved to int64 keys
+           "jaccard_prefix_join"]
 
 
 def bench(spark, qs, name, sf_dir, n):

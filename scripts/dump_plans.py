@@ -30,12 +30,8 @@ SHOWCASE = [
      "all-pairs"),
     ("corpus_build", "fused single-scan corpus signals (pinned <= 3 "
      "scans)"),
-    ("semantic_dedup_ann", "SRP-banded centroid assignment — hash joins "
-     "on band buckets, zero nested-loop scans"),
     ("dq_expectations", "one conditional-sum aggregate scan per audited "
      "table + stack() unpivot"),
-    ("semantic_dedup_fixedk", "fully linear SemDeDup: fixed-k Lloyd's on "
-     "a bounded scrambled-id sample + SRP-banded assignment"),
     ("text_bpe_tokens_dict", "1024-rank BPE via dictionary tokenization — "
      "depth-bounded segments over distinct words, broadcast join back"),
     ("dsir_importance", "DSIR hashed-ngram importance: one aggregate fits "

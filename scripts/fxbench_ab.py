@@ -1,12 +1,17 @@
 """Interleaved A/B of one fxbench workload: a base revision against the
-working tree.
+working tree (or against a second revision).
 
     python scripts/fxbench_ab.py --workload fx_stream --pairs 10 \
         --first-seed 41 --base-rev HEAD --out ab.json
 
-The base side is the committed files of ``--base-rev``, exported with
-``git archive`` into a temporary directory, so no worktree is left
-registered if the run dies. The change side is this repository's working tree.
+Both sides run from fresh ``git archive`` exports in temporary
+directories, so they start from equal trees and no worktree is left
+registered if the run dies. The base side is the committed files of
+``--base-rev``. The change side is the committed files of
+``--change-rev`` when given (the same rev on both sides is an A/A
+run), else a snapshot of the working tree: every file ``git add -A``
+would stage (untracked files included, ignored files not), written to
+a tree through a temporary index so the real index is left alone.
 Pair ``i`` runs seed ``first_seed + i`` on both sides; even pairs run
 the base first, odd pairs the change first, so a slow stretch of the
 host hits both sides alike.
@@ -38,10 +43,29 @@ SIDES = ("base", "change")
 
 
 def export_revision(rev: str, dest: str) -> None:
-    """The committed files of ``rev`` under ``dest``."""
+    """The committed files of ``rev`` (a commit or tree id) under
+    ``dest``."""
     archive = subprocess.run(["git", "-C", ROOT, "archive", rev],
                              check=True, capture_output=True).stdout
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def working_tree_id() -> str:
+    """The tree object of the working tree as ``git add -A`` would
+    stage it, built in a temporary copy of the index."""
+    index = subprocess.run(["git", "-C", ROOT, "rev-parse", "--git-path",
+                            "index"], check=True, capture_output=True,
+                           text=True).stdout.strip()
+    with tempfile.TemporaryDirectory(prefix="fxbench-ab-index-") as tmp:
+        env = dict(os.environ,
+                   GIT_INDEX_FILE=os.path.join(tmp, "index"))
+        if os.path.exists(os.path.join(ROOT, index)):
+            shutil.copy(os.path.join(ROOT, index), env["GIT_INDEX_FILE"])
+        subprocess.run(["git", "-C", ROOT, "add", "-A"], env=env,
+                       check=True, capture_output=True)
+        return subprocess.run(["git", "-C", ROOT, "write-tree"], env=env,
+                              check=True, capture_output=True,
+                              text=True).stdout.strip()
 
 
 def run_once(side_dir: str, workload: str, seed: int, seconds: int,
@@ -114,16 +138,21 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--base-rev", default="HEAD")
+    ap.add_argument("--change-rev",
+                    help="revision for the change side (default: the "
+                         "working tree)")
     ap.add_argument("--out", help="write every run and the summary here")
     args = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
 
-    base_dir = tempfile.mkdtemp(prefix="fxbench-ab-base-")
-    dirs = {"base": base_dir, "change": ROOT}
+    dirs = {side: tempfile.mkdtemp(prefix=f"fxbench-ab-{side}-")
+            for side in SIDES}
     pairs: list[dict] = []
     try:
-        export_revision(args.base_rev, base_dir)
+        export_revision(args.base_rev, dirs["base"])
+        export_revision(args.change_rev or working_tree_id(),
+                        dirs["change"])
         for i in range(args.pairs):
             seed = args.first_seed + i
             order = SIDES if i % 2 == 0 else SIDES[::-1]
@@ -139,7 +168,8 @@ def main(argv: list[str] | None = None) -> int:
                       f"steal_frac={r['steal_frac']:g} {shown}", flush=True)
             pairs.append(pair)
     finally:
-        shutil.rmtree(base_dir, ignore_errors=True)
+        for d in dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
 
     summary = summarize(pairs, directions(bench))
     print(f"summary workload={args.workload} pairs={len(pairs)} "

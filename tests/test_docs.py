@@ -18,6 +18,34 @@ def test_operator_map_covers_all_queries():
         f"queries missing from OPERATORS.md coverage map: {missing}")
 
 
+def test_operator_map_references_resolve():
+    """Every `<dir>/<mod>.py` file reference and `<dir>/<mod>.<name>`
+    attribute reference inside a code span of OPERATORS.md (dir one of
+    the package's subpackages) names a module file and an attribute of
+    it that exist, so a deleted or renamed operator cannot leave a
+    dangling row behind."""
+    import importlib
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    text = open(os.path.join(root, "OPERATORS.md")).read()
+    dirs = "operators|queries|streaming|functions|plans|sources"
+    refs = {m.groups()
+            for span in re.findall(r"`([^`\n]+)`", text)
+            for m in re.finditer(rf"\b({dirs})/(\w+)\.(\w+)", span)}
+    assert refs, "no module references found in OPERATORS.md"
+    dangling = []
+    for pkg, mod, name in sorted(refs):
+        path = os.path.join(root, "data_timeseries_java_spark", pkg,
+                            f"{mod}.py")
+        if not os.path.exists(path):
+            dangling.append(f"{pkg}/{mod}.py")
+        elif name != "py" and not hasattr(importlib.import_module(
+                f"data_timeseries_java_spark.{pkg}.{mod}"), name):
+            dangling.append(f"{pkg}/{mod}.{name}")
+    assert not dangling, f"OPERATORS.md names missing code: {dangling}"
+
+
 def test_driver_prefix_covers_ungated_queries():
     """The driver's correctness gate samples the first 50 registry
     entries each round, and ungated queries sort first (stable module

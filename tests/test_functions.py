@@ -1,4 +1,4 @@
-"""functions/ tier: salting equivalence, vector math, late-data policy."""
+"""functions/ tier: salting equivalence, late-data policy, BPE, safe_corr."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_timeseries_java_spark.fixtures import demo_ticks
-from data_timeseries_java_spark.functions import cosine, salted_sum
+from data_timeseries_java_spark.functions import salted_sum
 from data_timeseries_java_spark.operators.multimodal import (
     documents_as_media,
     resize_images,
@@ -29,15 +29,6 @@ def test_salted_sum_equals_plain_sum(spark, sf_dir):
     assert set(plain) == set(salted)
     for k in plain:
         assert abs(plain[k] - salted[k]) < 1e-6 * max(1.0, abs(plain[k]))
-
-
-def test_cosine_column(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], [0.0, 1.0]), (2, [1.0, 1.0], [1.0, 1.0])],
-        "id int, a array<double>, b array<double>")
-    got = {r.id: r.c for r in df.select("id", cosine("a", "b").alias("c")).collect()}
-    assert abs(got[1] - 0.0) < 1e-12
-    assert abs(got[2] - 1.0) < 1e-12
 
 
 def test_streaming_drops_late_rows(spark, tmp_path):
@@ -111,22 +102,6 @@ def test_fake_decode_adapter_path(spark, sf_dir):
         for by in payload_by_id[r.media_id]:
             hist[by % 8] += 1
         assert abs(r.feature[0] - hist[0] / n) < 1e-6
-
-
-def test_cosine_matrix_equals_hof(spark, sf_dir):
-    """Matrix-kernel near-dup must equal the per-pair zip_with plan."""
-    from data_timeseries_java_spark.operators.similarity import (
-        cosine_pairs,
-        cosine_pairs_matrix,
-    )
-    from data_timeseries_java_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = {(r.id_a, r.id_b): r.cosine
-         for r in cosine_pairs(emb, block_col="label", threshold=0.0).collect()}
-    b = {(r.id_a, r.id_b): r.cosine
-         for r in cosine_pairs_matrix(emb, threshold=0.0).collect()}
-    assert a == b and len(a) > 0
 
 
 def test_bpe_replace_chain_matches_classic_apply(spark):

@@ -199,16 +199,18 @@ def test_same_module_helper_edit_flips_hash(tmp_path, monkeypatch):
     assert h_a != h_b
 
 
-def test_helper_resolution_reaches_derived_tcs_machinery():
-    """The flagship's derived-TCS helpers (snap loop, SRP signs, the
-    oracle-pinned parallelism constant) are folded into its hash."""
+def test_helper_resolution_reaches_transitive_helpers():
+    """A query's same-module helpers, and the constants those helpers
+    read, are folded into its hash: the wide-universe headline calls
+    only ``_wide_corr_screen``, which reaches ``_wide_ticks`` and the
+    wide window/key constants."""
     import inspect
 
-    import data_timeseries_java_spark.queries.similarity as S
+    import data_timeseries_java_spark.queries.fx as S
     from data_timeseries_java_spark.queries._hash import (
         _same_module_helpers)
 
-    src = inspect.getsource(S.QUERIES["semantic_dedup"])
+    src = inspect.getsource(S.QUERIES["fx_corr_headline"])
     names = {n for n, _ in _same_module_helpers(S.__name__, src)}
-    assert {"_srp_signs", "TRAIN_PARALLELISM_RATIO",
-            "SEMDEDUP_T"} <= names
+    assert {"N_HEADLINE_KEYS", "_wide_corr_screen", "_wide_ticks",
+            "N_WIDE_KEYS", "WIDE_CORR_WINDOW", "WIDE_RES"} <= names

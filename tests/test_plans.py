@@ -69,12 +69,6 @@ def test_no_cartesian_products(spark, sf_dir):
     assert "CartesianProduct" not in formatted_plan(q)
 
 
-def test_knn_broadcasts_queries(spark, sf_dir):
-    q = all_queries()["knn_bruteforce"](spark, sf_dir)
-    plan = formatted_plan(q)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_tpch_hard_shapes_plan_clean(spark, sf_dir):
     """q2/q8/q21-style queries: correlated-subquery rewrites must stay
     equi-joins (no cartesian); dimension sides must broadcast against
@@ -120,27 +114,6 @@ def test_tpch_classic_shapes_plan_clean(spark, sf_dir):
             f"{name}: expected >= {min_bcast} broadcast joins")
 
 
-def test_semantic_dedup_ann_has_no_nested_loop_scan(spark, sf_dir):
-    """The SRP-banded assignment replaces ivf_assign's broadcast
-    nested-loop (vector x every-centroid) with hash joins on band
-    buckets: the ann plan must be free of nested-loop joins AND of
-    cartesians — that IS the linear-time claim, visible in the plan."""
-    qs = all_queries()
-    exact = formatted_plan(qs["semantic_dedup_exact"](spark, sf_dir))
-    ann = formatted_plan(qs["semantic_dedup_ann"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in exact  # the O(n*k) scan it replaces
-    assert "BroadcastNestedLoopJoin" not in ann
-    assert "CartesianProduct" not in ann
-    # the fully-linear variant keeps the banded assignment AND swaps the
-    # k~n training for fixed-k on a bounded sample — same plan guarantee.
-    # The unsuffixed flagship name routes HERE (static routing), so the
-    # default a user reaches for carries the linear-plan guarantee too.
-    for name in ("semantic_dedup_fixedk", "semantic_dedup"):
-        fixedk = formatted_plan(qs[name](spark, sf_dir))
-        assert "BroadcastNestedLoopJoin" not in fixedk, name
-        assert "CartesianProduct" not in fixedk, name
-
-
 # queries that intentionally cross into pandas/Arrow execution
 _PANDAS_QUERIES = {"media_decode_features", "media_png_decode",
                    "media_jpeg_header", "media_jpeg_decode",
@@ -149,19 +122,8 @@ _PANDAS_QUERIES = {"media_decode_features", "media_png_decode",
                    "media_video_frames", "media_cross_format_dedup",
                    "fx_ema_returns", "fx_holt_trend", "fx_kalman_level",
                    "fx_garch_vol", "fx_macd", "fx_ewma_cov",
-                   "neardup_cosine", "neardup_cosine_auto",
                    "fx_corr_wide", "fx_corr_headline",
-                   "embedding_covariance", "embedding_pca_top",
-                   "fx_imbalance_bars",
-                   # round 12: the flagship runs the kernelized
-                   # assignment/verdict (semantic_dedup_autok) —
-                   # identity with the declarative composition pinned
-                   # in tests/test_similarity.py
-                   "semantic_dedup",
-                   # round 14: corpus assignment through
-                   # ivf_assign_kernel (identity pinned in
-                   # test_ivf_assign_kernel_matches_declarative)
-                   "ann_ivf_two_level"}
+                   "fx_imbalance_bars"}
 
 
 # Physical-plan substrings that mark the quadratic-HOF trap class
@@ -253,26 +215,7 @@ _ITERATIVE_QUERIES = {"dedup_clusters", "dedup_keep_list",
                       "ema_ooo_stream_replay", "stream_join_replay",
                       "holt_ooo_stream_replay", "imbalance_ooo_stream_replay",
                       "vwap_ooo_stream_replay", "funnel_ooo_stream_replay",
-                      "reorder_recovery_stream_replay",
-                      "semantic_dedup_stream_replay",
-                      # round 14: ann_ivf_two_level runs one bounded
-                      # build-time centroid collect (nlist <= 100
-                      # rows) to feed the kernelized assignment —
-                      # the flagship precedent; the fully-lazy
-                      # declarative path stays available on the
-                      # operator (use_kernel=False)
-                      "ann_ivf_two_level",
-                      # round 12: the derived-k SemDeDup flagship runs
-                      # two DELIBERATE build-time actions — one
-                      # metadata-cheap parquet count to pick the k grid
-                      # point, and one bounded TakeOrdered collect of
-                      # the S = 25k training sample (the SemDeDup
-                      # paper's own single-node training posture) for
-                      # the driver-side numpy Lloyd's. Both are bounded
-                      # by design (the count reads row-group stats; the
-                      # sample is ∝ k, never ∝ n), unlike the stray
-                      # full-scan actions this guard exists to catch.
-                      "semantic_dedup"}
+                      "reorder_recovery_stream_replay"}
 
 
 
@@ -497,73 +440,18 @@ def test_corr_top_n_kernels_agree(spark, sf_dir):
     assert (join_out["value"] - mat_out["value"]).abs().max() <= 1e-9
 
 
-def test_cosine_dispatcher_kernel_by_block_size(spark, sf_dir):
-    """Same contract for the embedding near-dup dispatcher: block size
-    below the crossover -> per-pair zip_with plan (JVM); above ->
-    per-block Gram-matrix applyInPandas."""
-    from data_timeseries_java_spark.operators.similarity import (
-        COSINE_MATRIX_CROSSOVER, cosine_pairs_auto)
-
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    small = cosine_pairs_auto(emb, block_col="label", threshold=0.9,
-                              max_block_rows=COSINE_MATRIX_CROSSOVER)
-    assert "InPandas" not in formatted_plan(small)
-
-    big = cosine_pairs_auto(emb, block_col="label", threshold=0.9,
-                            max_block_rows=COSINE_MATRIX_CROSSOVER + 1)
-    assert "FlatMapGroupsInPandas" in formatted_plan(big)
-
-    with pytest.raises(ValueError, match="exactly one"):
-        cosine_pairs_auto(emb)
-
-
 def test_dispatcher_universe_hints_match_data(spark, sf_dir):
     """The static universe hints feeding the kernel dispatchers (the S3
     work-packet mapping: the pipeline KNOWS its instrument list) must
     track the data they describe, and the footer-stats helper must agree
     with a real count."""
     from data_timeseries_java_spark.queries.fx import N_EVENT_TYPES
-    from data_timeseries_java_spark.queries.similarity import EMB_N_LABELS
     from data_timeseries_java_spark.tables import parquet_row_count
 
     ev = load_table(spark, sf_dir, "events")
     assert ev.select("event_type").distinct().count() == N_EVENT_TYPES
     emb = load_table(spark, sf_dir, "embeddings")
-    assert emb.select("label").distinct().count() == EMB_N_LABELS
     assert parquet_row_count(sf_dir, "embeddings") == emb.count()
-
-
-def test_dispatcher_kernels_emit_identical_rows(spark, sf_dir):
-    """Routing is a pure physical-plan choice: both cosine kernels must
-    produce the same pairs on the same input. Compared with a tolerance,
-    not exceptAll: the JVM zip_with kernel and the numpy float64 Gram
-    kernel can differ in the last ulp, which exact equality would turn
-    into flakiness for values straddling the 1e-6 rounding boundary or
-    the emission threshold."""
-    from data_timeseries_java_spark.operators.similarity import (
-        cosine_pairs_auto)
-
-    # 0.9 would gate on an EMPTY pair set on this corpus (p99 within-label
-    # cosine ~0.295) and pass vacuously; 0.2 yields a real comparison set
-    thr = 0.2
-    emb = load_table(spark, sf_dir, "embeddings")
-    small = cosine_pairs_auto(emb, block_col="label", threshold=thr,
-                              max_block_rows=1).toPandas()
-    big = cosine_pairs_auto(emb, block_col="label", threshold=thr,
-                            max_block_rows=10**6).toPandas()
-    m = small.merge(big, on=["id_a", "id_b"], how="outer",
-                    suffixes=("_s", "_b"), indicator=True)
-    both = m[m["_merge"] == "both"]
-    assert len(both) > 0, "comparison set is empty — the test proves nothing"
-    assert (both["cosine_s"] - both["cosine_b"]).abs().max() <= 1e-6 + 1e-9
-    # a pair emitted by only one kernel is legitimate ONLY when its
-    # cosine sits at the emission threshold within float noise
-    lonely = m[m["_merge"] != "both"]
-    if len(lonely):
-        lone_cos = lonely["cosine_s"].fillna(lonely["cosine_b"])
-        assert ((lone_cos - thr).abs() <= 1e-6).all(), (
-            f"kernels disagree on pairs away from the threshold:\n{lonely}")
 
 
 def test_round7_additions_plan_shapes(spark, sf_dir):
@@ -573,8 +461,7 @@ def test_round7_additions_plan_shapes(spark, sf_dir):
     vocab distinct, per-doc aggregate, join back; the pre-r14
     zero-exchange doc-level chain paid O(merges x corpus_chars)
     execution instead, measured 4.5x slower at sf0.1); BPE packing
-    keeps the single per-shard window shuffle; the covariance reduce
-    is one hash shuffle plus tiny broadcasts; the hurst explode stays
+    keeps the single per-shard window shuffle; the hurst explode stays
     within the candle pipeline's budget + its two aggregations."""
     # earlier tests in a shared session may leave cached subtrees
     # (queries using plans/materialize) that substitute into these
@@ -583,7 +470,6 @@ def test_round7_additions_plan_shapes(spark, sf_dir):
     qs = all_queries()
     for name, budget in [("text_bpe_tokens", 4),
                          ("sequence_packing_bpe", 1),
-                         ("embedding_covariance", 4),
                          ("fx_hurst", 5),
                          ("fx_holt_trend", 5), ("fx_kalman_level", 5),
                          ("fx_garch_vol", 5), ("fx_half_life", 5),
@@ -602,11 +488,7 @@ def test_round8_additions_plan_shapes(spark, sf_dir):
     adds ONLY a TakeOrdered (same budget, no extra exchange); substring
     spans are two keyed shuffles (gram-hash agg, dup-position window —
     gram assembly went per-row in r15); the funnel is the corpus_build
-    flags shape plus one global
-    aggregate. The fixedk SemDeDup budget is dominated by the unrolled
-    3-iteration Lloyd's on the bounded SAMPLE — high but constant in
-    corpus size by construction (the count would grow with ITERATIONS,
-    never with data)."""
+    flags shape plus one global aggregate."""
     spark.catalog.clearCache()
     qs = all_queries()
     for name, budget in [("dsir_importance", 5), ("dsir_resample", 5),
@@ -616,12 +498,6 @@ def test_round8_additions_plan_shapes(spark, sf_dir):
                          ("dedup_substring_spans", 2),
                          ("corpus_funnel", 4),
                          ("text_bpe_tokens_dict", 4),
-                         # the unsuffixed flagship routes to the same
-                         # fixed-k plan: both pinned to a budget that is
-                         # constant in corpus size (grows only with the
-                         # unrolled ITERATIONS, never with data)
-                         ("semantic_dedup_fixedk", 55),
-                         ("semantic_dedup", 55),
                          # RAG chunking is a pure map: ANY exchange
                          # would mean the generator plan regressed
                          ("doc_chunks", 0)]:
@@ -737,118 +613,101 @@ def test_hof_traps_stay_fixed(spark, sf_dir):
 # test_every_lane_is_classified — an unadjudicated default-sounding
 # name routing to a quadratic is the round-11 semantic_dedup lesson.
 _SCALE_PATH = {
-    "above_segment_avg", "allowed_lateness_stream_replay", "ann_ivf",
-    "ann_ivf_trained", "ann_ivf_two_level", "ann_lsh",
-    "ann_recall_eval", "ann_rerank",
-    "ann_truncation_recall", "anomaly_stream_replay",
-    "approx_distinct_users", "approx_topk_cms",
+    "above_segment_avg", "allowed_lateness_stream_replay",
+    "anomaly_stream_replay", "approx_distinct_users", "approx_topk_cms",
     "approx_value_quantiles", "asof_bucketed_stream_replay",
-    "asof_purchase_click", "asof_stream_replay",
-    "attribution_linear", "benford_order_totals", "bm25_search",
-    "brand_pagerank", "brand_supplier_counts", "brand_triangles",
-    "brand_triangles_deg", "classifier_auc",
-    "classifier_calibration", "cohort_ltv", "cohort_retention",
-    "corpus_build", "corpus_funnel", "corpus_stream_replay",
-    "cross_source_dup", "customer_order_distribution",
-    "customer_rfm", "customer_set_ops", "customer_spend_quartiles",
-    "customers_without_orders", "dataset_split", "decontaminate",
-    "decontaminate_bloom", "decontaminate_winnow", "dedup_clusters",
-    "dedup_containment", "dedup_exact", "dedup_family_histogram",
-    "dedup_fuzzy", "dedup_keep_list", "dedup_minhash_lsh",
-    "dedup_segments", "dedup_segments_cdc", "dedup_simhash",
-    "dedup_stream_replay", "dedup_substring_spans",
-    "disjunctive_revenue", "distinct_suppliers",
-    "distinct_users_by_type", "doc_chunks",
+    "asof_purchase_click", "asof_stream_replay", "attribution_linear",
+    "benford_order_totals", "bm25_search", "brand_pagerank",
+    "brand_supplier_counts", "brand_triangles", "brand_triangles_deg",
+    "classifier_auc", "classifier_calibration", "cohort_ltv",
+    "cohort_retention", "corpus_build", "corpus_funnel",
+    "corpus_stream_replay", "cross_source_dup",
+    "customer_order_distribution", "customer_rfm", "customer_set_ops",
+    "customer_spend_quartiles", "customers_without_orders",
+    "dataset_split", "decontaminate", "decontaminate_bloom",
+    "decontaminate_winnow", "dedup_clusters", "dedup_containment",
+    "dedup_exact", "dedup_family_histogram", "dedup_fuzzy",
+    "dedup_keep_list", "dedup_minhash_lsh", "dedup_segments",
+    "dedup_segments_cdc", "dedup_simhash", "dedup_stream_replay",
+    "dedup_substring_spans", "disjunctive_revenue",
+    "distinct_suppliers", "distinct_users_by_type", "doc_chunks",
     "dominant_part_suppliers", "dq_expectations",
-    "drawdown_stream_replay", "dsir_importance",
-    "dsir_quantile_select", "dsir_resample", "dsir_stream_replay",
-    "ema_ooo_stream_replay", "ema_stream_replay",
-    "embedding_covariance", "embedding_norm_outliers",
-    "embedding_pca_top", "embedding_quantize",
-    "embedding_srp_sketch", "embedding_stats", "event_ab_test",
-    "event_anomalies", "event_cuped", "event_decay_score",
-    "event_gap_stats", "event_hour_profile", "event_mad_outliers",
-    "event_transitions", "event_winsorize", "events_json_props",
-    "events_k_anonymity", "feature_woe_iv", "forecast_revenue",
-    "funnel_conversion", "funnel_ooo_stream_replay",
-    "funnel_stream_replay", "funnel_time_to_convert",
-    "fx_align_series", "fx_amihud", "fx_atr", "fx_autocorr",
-    "fx_backtest_donchian", "fx_bollinger", "fx_candle_patterns",
-    "fx_candles_bidask", "fx_candles_complete",
-    "fx_candles_interpolated", "fx_candles_ohlc",
-    "fx_candles_rollup", "fx_candles_stream_replay",
-    "fx_cointegration", "fx_corr_headline", "fx_corr_stream_replay",
-    "fx_corr_threshold", "fx_corr_underlying",
+    "drawdown_stream_replay", "dsir_importance", "dsir_quantile_select",
+    "dsir_resample", "dsir_stream_replay", "ema_ooo_stream_replay",
+    "ema_stream_replay", "event_ab_test", "event_anomalies",
+    "event_cuped", "event_decay_score", "event_gap_stats",
+    "event_hour_profile", "event_mad_outliers", "event_transitions",
+    "event_winsorize", "events_json_props", "events_k_anonymity",
+    "feature_woe_iv", "forecast_revenue", "funnel_conversion",
+    "funnel_ooo_stream_replay", "funnel_stream_replay",
+    "funnel_time_to_convert", "fx_align_series", "fx_amihud", "fx_atr",
+    "fx_autocorr", "fx_backtest_donchian", "fx_bollinger",
+    "fx_candle_patterns", "fx_candles_bidask", "fx_candles_complete",
+    "fx_candles_interpolated", "fx_candles_ohlc", "fx_candles_rollup",
+    "fx_candles_stream_replay", "fx_cointegration", "fx_corr_headline",
+    "fx_corr_stream_replay", "fx_corr_threshold", "fx_corr_underlying",
     "fx_corr_user_buckets", "fx_corr_wide", "fx_cross_rate",
     "fx_cross_zscore", "fx_cusum", "fx_dollar_bars", "fx_donchian",
-    "fx_drawdown", "fx_ema_returns", "fx_ewma_cov",
-    "fx_gapfill_rows", "fx_garch_vol", "fx_half_life",
-    "fx_holt_trend", "fx_hourly_seasonality", "fx_hurst",
-    "fx_imbalance_bars", "fx_index_beta", "fx_kalman_level",
-    "fx_kyle_lambda", "fx_lead_lag", "fx_log_returns", "fx_macd",
-    "fx_mean_correlation", "fx_momentum_ls", "fx_obv",
-    "fx_ohlc_vol_estimators", "fx_pair_beta", "fx_pair_correlation",
-    "fx_pair_correlation_auto", "fx_pair_spearman",
-    "fx_parkinson_vol", "fx_realized_vol", "fx_roll_spread",
-    "fx_rsi", "fx_sliding_returns", "fx_spread_stats",
+    "fx_drawdown", "fx_ema_returns", "fx_ewma_cov", "fx_gapfill_rows",
+    "fx_garch_vol", "fx_half_life", "fx_holt_trend",
+    "fx_hourly_seasonality", "fx_hurst", "fx_imbalance_bars",
+    "fx_index_beta", "fx_kalman_level", "fx_kyle_lambda", "fx_lead_lag",
+    "fx_log_returns", "fx_macd", "fx_mean_correlation",
+    "fx_momentum_ls", "fx_obv", "fx_ohlc_vol_estimators",
+    "fx_pair_beta", "fx_pair_correlation", "fx_pair_correlation_auto",
+    "fx_pair_spearman", "fx_parkinson_vol", "fx_realized_vol",
+    "fx_roll_spread", "fx_rsi", "fx_sliding_returns", "fx_spread_stats",
     "fx_stochastic", "fx_tick_bars", "fx_tick_rule", "fx_tsrv",
     "fx_twap", "fx_var_es", "fx_variance_ratio", "fx_vol_regimes",
     "fx_volume_curve", "fx_volume_profile", "fx_vpin", "fx_vwap",
     "fx_workpacket_stats", "garch_stream_replay", "gopher_rules",
-    "gridq_stream_replay", "hard_negatives", "hll_pair_intersection",
-    "hll_stream_replay", "hll_user_rollup", "holt_ooo_stream_replay",
-    "holt_stream_replay", "imbalance_bars_stream_replay",
-    "imbalance_ooo_stream_replay", "jaccard_prefix_join",
-    "kalman_stream_replay", "label_centroid_distances",
-    "langid_confusion", "large_volume_customers",
-    "late_data_state_stream_replay", "late_data_stream_replay",
-    "leakage_safe_split", "lineitem_grouping_sets",
-    "macd_stream_replay", "market_basket_pairs",
-    "media_cross_format_dedup", "media_decode_features",
-    "media_jpeg_decode", "media_jpeg_header", "media_metadata",
-    "media_png_decode", "media_resize", "media_video_frames",
-    "media_wav_features", "media_wav_resample", "media_wav_spectrum",
-    "merge_corrections", "min_cost_supplier", "mixture_sample",
-    "mixture_token_budget", "monthly_order_stats",
+    "gridq_stream_replay", "hll_pair_intersection", "hll_stream_replay",
+    "hll_user_rollup", "holt_ooo_stream_replay", "holt_stream_replay",
+    "imbalance_bars_stream_replay", "imbalance_ooo_stream_replay",
+    "jaccard_prefix_join", "kalman_stream_replay", "langid_confusion",
+    "large_volume_customers", "late_data_state_stream_replay",
+    "late_data_stream_replay", "leakage_safe_split",
+    "lineitem_grouping_sets", "macd_stream_replay",
+    "market_basket_pairs", "media_cross_format_dedup",
+    "media_decode_features", "media_jpeg_decode", "media_jpeg_header",
+    "media_metadata", "media_png_decode", "media_resize",
+    "media_video_frames", "media_wav_features", "media_wav_resample",
+    "media_wav_spectrum", "merge_corrections", "min_cost_supplier",
+    "mixture_sample", "mixture_token_budget", "monthly_order_stats",
     "monthly_revenue_complete", "moving_avg_range", "moving_median",
-    "nation_customer_list", "nation_market_share",
-    "nation_outer_join", "nation_profit", "neardup_stream_replay",
-    "neardup_threshold_sweep", "order_priority_check", "order_ranks",
-    "order_ship_latency", "orders_flag_filter",
-    "orders_with_expensive_items", "packing_efficiency",
-    "part_abc_classification", "part_scalar_functions",
-    "part_supplier_hhi", "pii_scan", "price_quantiles",
-    "pricing_summary", "priority_pivot", "priority_rollup",
-    "profile_lineitem", "promo_revenue", "psi_stream_replay",
-    "quality_classifier", "range_join_event_candle",
-    "recovery_stream_replay", "region_nation_share",
-    "reorder_recovery_stream_replay", "returned_item_report",
-    "revenue_by_nation", "revenue_gini", "revenue_pareto",
-    "rich_idle_customers", "rolling_distinct_users",
+    "nation_customer_list", "nation_market_share", "nation_outer_join",
+    "nation_profit", "neardup_stream_replay", "neardup_threshold_sweep",
+    "order_priority_check", "order_ranks", "order_ship_latency",
+    "orders_flag_filter", "orders_with_expensive_items",
+    "packing_efficiency", "part_abc_classification",
+    "part_scalar_functions", "part_supplier_hhi", "pii_scan",
+    "price_quantiles", "pricing_summary", "priority_pivot",
+    "priority_rollup", "profile_lineitem", "promo_revenue",
+    "psi_stream_replay", "quality_classifier",
+    "range_join_event_candle", "recovery_stream_replay",
+    "region_nation_share", "reorder_recovery_stream_replay",
+    "returned_item_report", "revenue_by_nation", "revenue_gini",
+    "revenue_pareto", "rich_idle_customers", "rolling_distinct_users",
     "salted_event_stats", "scd2_history", "scd2_stream_replay",
-    "scd2_user_status", "seasonal_profile", "semantic_dedup",
-    "semantic_dedup_stream_replay",
-    "sequence_packing", "sequence_packing_bpe",
-    "sessions_stream_replay", "ship_lag_quantiles",
-    "shipping_priority", "small_quantity_revenue", "snapshot_diff",
-    "source_keyness", "source_lang_kl", "source_ngram_overlap",
-    "source_token_stats", "status_cube", "stratified_sample",
-    "stream_join_replay", "supplier_share", "text_bigram_lm",
-    "text_bpe_tokens", "text_bpe_tokens_dict", "text_burstiness",
-    "text_collocations", "text_entropy", "text_fingerprint",
-    "text_langid", "text_novelty", "text_quality",
+    "scd2_user_status", "seasonal_profile", "sequence_packing",
+    "sequence_packing_bpe", "sessions_stream_replay",
+    "ship_lag_quantiles", "shipping_priority", "small_quantity_revenue",
+    "snapshot_diff", "source_keyness", "source_lang_kl",
+    "source_ngram_overlap", "source_token_stats", "status_cube",
+    "stratified_sample", "stream_join_replay", "supplier_share",
+    "text_bigram_lm", "text_bpe_tokens", "text_bpe_tokens_dict",
+    "text_burstiness", "text_collocations", "text_entropy",
+    "text_fingerprint", "text_langid", "text_novelty", "text_quality",
     "text_readability", "text_repetition", "text_tokens",
     "text_winnowing", "tfidf_neardup", "tfidf_top_terms",
-    "tick_bars_stream_replay", "tokenizer_fertility",
-    "top_customers", "top_revenue_supplier", "topk_stream_replay",
-    "tpch_q21", "user_behavior_entropy", "user_event_entropy",
-    "user_sessions", "user_survival_km", "value_ks_test",
-    "value_psi", "value_trend_ols", "value_trend_theilsen",
-    "vocab_zipf", "vocabulary_topk", "vol_stream_replay",
-    "volume_shipping", "vwap_ooo_stream_replay",
-    "vwap_stream_replay", "waiting_suppliers",
-    "walk_forward_forecast", "weekly_new_returning",
-    "weighted_median_price", "window_sampler"
+    "tick_bars_stream_replay", "tokenizer_fertility", "top_customers",
+    "top_revenue_supplier", "topk_stream_replay", "tpch_q21",
+    "user_behavior_entropy", "user_event_entropy", "user_sessions",
+    "user_survival_km", "value_ks_test", "value_psi", "value_trend_ols",
+    "value_trend_theilsen", "vocab_zipf", "vocabulary_topk",
+    "vol_stream_replay", "volume_shipping", "vwap_ooo_stream_replay",
+    "vwap_stream_replay", "waiting_suppliers", "walk_forward_forecast",
+    "weekly_new_returning", "weighted_median_price", "window_sampler"
 }
 
 

@@ -1,5 +1,5 @@
-"""transformWithStateInPandas EMA: cross-batch state continuity vs a
-pandas ewm oracle over the full series."""
+"""Streaming EMA: cross-batch state continuity vs a pandas ewm oracle
+over the full series."""
 
 from __future__ import annotations
 
@@ -8,53 +8,7 @@ import os
 import time as _time
 from datetime import datetime, timezone
 
-import pytest
-
 from data_timeseries_java_spark.schemas import TICK_SCHEMA
-
-
-def test_streaming_ema_matches_pandas_or_gates_cleanly(spark, tmp_path):
-    """Both contracts are real assertions — no skip: with protobuf
-    present the typed-state pipeline must match the pandas ewm oracle;
-    without it, streaming_ema must raise the directed RuntimeError
-    up front (not fail deep inside query initialization)."""
-    import pandas as pd
-
-    from data_timeseries_java_spark.streaming.ema_stream import (
-        state_api_available,
-        streaming_ema,
-    )
-
-    d = str(tmp_path)
-    t = lambda m: datetime(2024, 8, 1, 0, m, tzinfo=timezone.utc)
-    prices = [10.0, 12.0, 11.0, 15.0, 14.0, 13.0, 16.0, 12.0]
-    rows = [("K", t(m), p, p, True) for m, p in enumerate(prices)]
-    base = _time.time() - 1000
-    # 3 ordered batches so state must carry across micro-batches
-    for i, chunk in enumerate([rows[:3], rows[3:6], rows[6:]]):
-        spark.createDataFrame(chunk, TICK_SCHEMA).coalesce(1).write.mode(
-            "overwrite").parquet(f"{d}/f{i}")
-        for p in glob.glob(f"{d}/f{i}/*"):
-            os.utime(p, (base + i * 10, base + i * 10))
-
-    src = (spark.readStream.schema(TICK_SCHEMA)
-           .option("maxFilesPerTrigger", 1).parquet(f"{d}/f*"))
-
-    if not state_api_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            streaming_ema(src, alpha=0.3)
-        return
-
-    out = streaming_ema(src, alpha=0.3)
-    q = (out.writeStream.format("memory").queryName("ema_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {r.event_time: r.ema for r in spark.table("ema_stream").collect()}
-    want = pd.Series(prices).ewm(alpha=0.3, adjust=False).mean()
-    assert len(got) == len(prices)
-    for m, w in enumerate(want):
-        assert abs(got[t(m).replace(tzinfo=None)] - w) < 1e-12
 
 
 def test_streaming_ema_applyinpandas_matches_pandas(spark, tmp_path):
