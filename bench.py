@@ -55,24 +55,18 @@ HEADLINE = [
     # 499,500 pairs/slide (/root/reference/README.MD:41)
     "fx_corr_headline",
     # training-data extensions
-    "dedup_minhash_lsh",
     "text_quality",
-    # composed end-to-end corpus pipeline (fused single-scan plan)
-    "corpus_build",
     # real BPE subword tokenization — 64-rule replace chain in one
     # whole-stage-codegen projection, no shuffle (round 7)
     "text_bpe_tokens",
     # round-7 batch 2: recursive MACD + EWMA pair covariance (grouped-map
-    # recursions), inverted-index TF-IDF pairs,
-    # Bloom-bitset decontamination, hashed linear classifier
+    # recursions), inverted-index TF-IDF pairs, hashed linear classifier
     "fx_macd",
     "fx_ewma_cov",
     # production-vocab dictionary tokenizer (1024 ranks, segmented)
     "text_bpe_tokens_dict",
     "dsir_importance",
-    "dedup_substring_spans",
     "tfidf_neardup",
-    "decontaminate_bloom",
     "quality_classifier",
     # round 8 session 2: event-driven bars (per-key total-order sort +
     # bucket aggregate — the non-time-bar family) and the cross-source
@@ -94,9 +88,7 @@ HEADLINE = [
     "media_resize",
     "media_wav_features",
     "media_video_frames",
-    # round 9: RAG chunk manifest (pure-map control lane) and the
-    # cross-sectional momentum long-short capstone
-    "doc_chunks",
+    # round 9: the cross-sectional momentum long-short capstone
     "fx_momentum_ls",
     # round 10: full q21 as a single-pass decorrelation (one lineitem
     # scan; the hardest classic join shape)

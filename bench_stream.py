@@ -191,20 +191,15 @@ def main() -> None:
         streaming_complete_candles,
         streaming_correlations,
         streaming_cms_topk,
-        streaming_corpus_build,
-        streaming_dedup_content,
-        streaming_dedup_exact,
         streaming_ema_applyinpandas,
         streaming_garch,
         streaming_holt,
         streaming_kalman,
         streaming_macd,
-        streaming_neardup,
         streaming_ohlc_candles,
         streaming_realized_volatility,
         streaming_sessions,
     )
-    from data_timeseries_java_spark.tables import load_table
 
     spark = get_spark("bench-stream")
     spark.sparkContext.setLogLevel("ERROR")
@@ -227,8 +222,6 @@ def main() -> None:
     returns_src = lambda: (tick_src()  # noqa: E731
                            .select("key", F.col("event_time").alias("time"),
                                    F.log("ask").alias("value")))
-    eval_docs = (load_table(spark, sf_dir, "documents")
-                 .limit(50).select("doc_id", "text"))
     # instrument universe for the global gap-fill of the complete-candle
     # stream and the fx pipeline (events are a SPARSE feed: without it,
     # keys that first tick late lack batch's leading gap candles)
@@ -244,10 +237,6 @@ def main() -> None:
         ("complete_candles_state", lambda: streaming_complete_candles(
             spark, tick_src(), f"{work}/candles", "120 seconds",
             universe=universe)),
-        ("dedup_exact", lambda: streaming_dedup_exact(
-            ev_src(), ["user_id", "event_type"], "ts", "30 minutes")),
-        ("dedup_content", lambda: streaming_dedup_content(
-            doc_src(), "text", "ts", "30 minutes")),
         ("ema_state", lambda: streaming_ema_applyinpandas(
             tick_src())),
         # recursive series family (round 7): same keyed-state shape as
@@ -316,10 +305,6 @@ def main() -> None:
             watermark="2 minutes", n_buckets=64)),
         ("anomalies_fb", lambda: streaming_anomalies(
             spark, ev_src(), f"{work}/anomalies")),
-        ("neardup_fb", lambda: streaming_neardup(
-            spark, doc_src(), f"{work}/neardup")),
-        ("corpus_fb", lambda: streaming_corpus_build(
-            spark, doc_src(), eval_docs, f"{work}/corpus")),
         ("cms_topk_fb", lambda: streaming_cms_topk(
             spark, ev_src(), f"{work}/topk", key_col="user_id")),
         ("gridq_fb", lambda: streaming_grid_quantiles(

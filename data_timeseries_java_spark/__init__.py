@@ -7,13 +7,11 @@ Spark-first: DataFrame/SQL logical plans optimized by Catalyst, Structured
 Streaming for the streaming path, and Pandas UDFs only where built-in
 operators cannot express the semantics.
 
-Beyond reference parity it adds the operators a large-scale training-data
-pipeline needs: deduplication (exact / MinHash-LSH / SimHash / n-gram
-Jaccard), text analysis (language-ID, quality scoring, token counting,
-fingerprinting), and a multimodal tier with REAL pure-Python codecs
-(PNG, baseline JPEG, PCM WAV, MJPEG-AVI video) behind Arrow-batched
-decode/resize/feature operators — facades: ``api.FXEngine``,
-``api.CorpusEngine``, ``api.MediaEngine``.
+Beyond reference parity it adds text analysis (language-ID, quality
+scoring, token counting, fingerprinting) and a multimodal tier with REAL
+pure-Python codecs (PNG, baseline JPEG, PCM WAV, MJPEG-AVI video) behind
+Arrow-batched decode/resize/feature operators — facades:
+``api.FXEngine``, ``api.MediaEngine``.
 
 Design target: 100 TB on a 1000-executor cluster. Partition by event date,
 bucket by instrument key, broadcast dimension tables, keep every expression

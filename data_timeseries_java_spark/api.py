@@ -143,107 +143,14 @@ class FXEngine:
         return donchian_channels(candles, n_windows=n_windows)
 
 
-@dataclass
-class CorpusOptions:
-    """Training-data pipeline knobs (engine extension — the reference
-    has no corpus surface; see OPERATORS.md 'Training-data extensions')."""
-    quality_min: float = 0.55
-    decon_k: int = 5
-    decon_min_overlap: int = 3
-    pack_budget: int = 256
-    dedup_watermark: str = "1 hour"
-
-
-class CorpusEngine:
-    """Composable training-data pipeline over document DataFrames
-    (doc_id, text, lang, source) — the corpus-side sibling of FXEngine.
-    Batch methods return lazy plans; ``stream`` starts the streaming
-    build (streaming/corpus_stream.py)."""
-
-    def __init__(self, spark: SparkSession,
-                 options: CorpusOptions | None = None):
-        self.spark = spark
-        self.options = options or CorpusOptions()
-
-    def build(self, docs: DataFrame,
-              eval_docs: DataFrame | None = None) -> DataFrame:
-        """Fused quality + language + dedup-keeper (+ decontamination
-        when ``eval_docs`` is given) corpus build."""
-        from data_timeseries_java_spark.operators.corpus import corpus_build
-        o = self.options
-        return corpus_build(docs, eval_docs, quality_min=o.quality_min,
-                            decon_k=o.decon_k,
-                            decon_min_overlap=o.decon_min_overlap)
-
-    def splits(self, docs: DataFrame) -> DataFrame:
-        """Leakage-safe train/val/test assignment (fingerprint groups)."""
-        from data_timeseries_java_spark.operators.corpus import (
-            leakage_safe_split,
-        )
-        return leakage_safe_split(docs)
-
-    def packs(self, docs: DataFrame) -> DataFrame:
-        """Per-shard sequence-packing manifest."""
-        from data_timeseries_java_spark.operators.corpus import (
-            sequence_packing,
-        )
-        return sequence_packing(docs, pack_budget=self.options.pack_budget)
-
-    def chunks(self, docs: DataFrame, chunk_tokens: int = 64,
-               overlap: int = 16) -> DataFrame:
-        """RAG chunk manifest: fixed-token windows with overlap,
-        stable (doc_id, chunk_idx) identity
-        (operators.corpus.chunk_documents)."""
-        from data_timeseries_java_spark.operators.corpus import (
-            chunk_documents,
-        )
-        return chunk_documents(docs, chunk_tokens=chunk_tokens,
-                               overlap=overlap)
-
-    def stream(self, docs_stream: DataFrame, eval_docs: DataFrame,
-               work_dir: str, time_col: str = "ts"):
-        """Start the streaming corpus build; returns the StreamingQuery."""
-        from data_timeseries_java_spark.streaming.corpus_stream import (
-            streaming_corpus_build,
-        )
-        o = self.options
-        return streaming_corpus_build(
-            self.spark, docs_stream, eval_docs, work_dir,
-            quality_min=o.quality_min, time_col=time_col,
-            watermark=o.dedup_watermark, decon_k=o.decon_k,
-            decon_min_overlap=o.decon_min_overlap)
-
-    def funnel(self, docs: DataFrame, eval_predicate) -> DataFrame:
-        """Per-stage attrition report of the build funnel (quality →
-        language → dedup keeper → decontamination) — the observability
-        table published next to a filtering run's output."""
-        from data_timeseries_java_spark.operators.corpus import (
-            corpus_funnel_attrition,
-        )
-        o = self.options
-        return corpus_funnel_attrition(
-            docs, eval_predicate=eval_predicate, quality_min=o.quality_min,
-            decon_k=o.decon_k, decon_min_overlap=o.decon_min_overlap)
-
-    def select(self, docs: DataFrame, target, n_keep: int = 100) -> DataFrame:
-        """DSIR data selection: importance-score every document against
-        the ``target`` predicate's slice, then draw a deterministic
-        Gumbel top-``n_keep`` weighted sample."""
-        from data_timeseries_java_spark.operators.text import (
-            dsir_importance,
-            dsir_resample,
-        )
-        return dsir_resample(dsir_importance(docs, target), n_keep=n_keep)
-
-
 class MediaEngine:
     """Multimodal tier over (media_id, payload[, modality]) DataFrames —
-    the binary-column sibling of FXEngine/CorpusEngine. Every method is
-    a lazy plan over Arrow-batched codec operators; the four REAL
-    pure-Python codecs (PNG / baseline JPEG / PCM WAV / MJPEG-AVI) are
-    engaged by payload magic, and formats that genuinely need a native
-    library raise ``NotImplementedError`` inside the executor task
-    rather than fabricating output.
+    the binary-column sibling of FXEngine. Every method is a lazy plan
+    over Arrow-batched codec operators; the four REAL pure-Python codecs
+    (PNG / baseline JPEG / PCM WAV / MJPEG-AVI) are engaged by payload
+    magic, and formats that genuinely need a native library raise
+    ``NotImplementedError`` inside the executor task rather than
+    fabricating output.
 
     ``image_decoder`` (``bytes -> (h, w, c) uint8 ndarray``) swaps the
     pixel codec under every pixel-inflating method (``decode`` /

@@ -6,7 +6,6 @@ FX time-series pipeline (reference parity, SURVEY.md §2):
   correlation — sliding-window pairwise Pearson correlation
 
 Training-data pipeline extensions:
-  dedup       — exact / MinHash-LSH / SimHash / n-gram-Jaccard
   text        — language-ID, quality scoring, token counts, fingerprints
   multimodal  — opaque binary columns with typed metadata
 """

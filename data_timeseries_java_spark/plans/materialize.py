@@ -1,9 +1,9 @@
 """Cache-lifetime policy hook: how multi-consumer subtrees materialize.
 
 Several builders (``pairwise_correlations``, ``pairwise_regression``,
-``lead_lag_correlation``, ``minhash_lsh_dedup``) feed one expensive
-subtree to 2-3 consumers whose differing column pruning defeats
-Catalyst exchange reuse, so they materialize it once. The
+``lead_lag_correlation``) feed one expensive subtree to 2-3 consumers
+whose differing column pruning defeats Catalyst exchange reuse, so
+they materialize it once. The
 boolean ``cache_input=`` / ``cache_plan=`` flags say WHETHER to
 materialize; this module's policy says HOW — ``cache()`` by default,
 swappable for ``persist(StorageLevel)`` / ``checkpoint()`` /

@@ -21,8 +21,6 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 
 from data_timeseries_java_spark.queries import (
-    corpus,
-    dedup,
     fx,
     multimodal,
     relational,
@@ -32,8 +30,8 @@ from data_timeseries_java_spark.queries import (
     tpch_hard,
 )
 
-_MODULES = [fx, relational, relational_ext, tpch_hard, dedup, text,
-            multimodal, corpus, scale]
+_MODULES = [fx, relational, relational_ext, tpch_hard, text, multimodal,
+            scale]
 
 
 def _registry_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

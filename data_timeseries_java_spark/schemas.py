@@ -20,47 +20,11 @@ TICK_SCHEMA = T.StructType([
     T.StructField("is_live", T.BooleanType(), False),
 ])
 
-# Nested tick struct retained inside candles so min/max keep the whole
-# tick (value AND its timestamp), matching TSAggValueProto semantics
-# (src/TimeSeriesProtos.proto:39-51).
-TICK_STRUCT = T.StructType([
-    T.StructField("time", T.TimestampType(), True),
-    T.StructField("bid", T.DoubleType(), True),
-    T.StructField("ask", T.DoubleType(), True),
-    T.StructField("is_live", T.BooleanType(), True),
-])
-
-# TSAggValueProto: one OHLC candle per (key, fixed window).
-CANDLE_SCHEMA = T.StructType([
-    T.StructField("key", T.StringType(), False),
-    T.StructField("window_start", T.TimestampType(), False),
-    T.StructField("window_end", T.TimestampType(), False),
-    T.StructField("open", TICK_STRUCT, True),
-    T.StructField("close", TICK_STRUCT, True),
-    T.StructField("min_ask", TICK_STRUCT, True),
-    T.StructField("max_ask", TICK_STRUCT, True),
-    T.StructField("min_bid", TICK_STRUCT, True),
-    T.StructField("max_bid", TICK_STRUCT, True),
-    T.StructField("is_live", T.BooleanType(), False),
-])
-
 # WorkDataPoint (proto:88-92): one log-return observation.
 RETURN_SCHEMA = T.StructType([
     T.StructField("key", T.StringType(), False),
     T.StructField("time", T.TimestampType(), False),
     T.StructField("value", T.DoubleType(), False),
-])
-
-# Correlation (proto:94-104).
-CORRELATION_SCHEMA = T.StructType([
-    T.StructField("window_start", T.TimestampType(), False),
-    T.StructField("window_end", T.TimestampType(), False),
-    T.StructField("key1", T.StringType(), False),
-    T.StructField("key2", T.StringType(), False),
-    T.StructField("value", T.DoubleType(), True),
-    T.StructField("x_count", T.IntegerType(), False),
-    T.StructField("y_count", T.IntegerType(), False),
-    T.StructField("is_nan", T.BooleanType(), False),
 ])
 
 # WorkPacketConfig (proto:65-68): the static instrument universe.

@@ -4,10 +4,6 @@ Layout policy (SURVEY.md §7 M6):
 - **Partition by event date** — every candle/correlation query carries a
   time range; date partitions turn it into partition PRUNING (the scan
   never opens irrelevant days).
-- **Bucket by instrument key** — repeated per-key operations (candle
-  agg, carry-forward, correlation re-runs) read co-located keys;
-  bucketed tables let Spark skip the shuffle entirely for
-  bucket-compatible joins/aggs.
 - Target file sizes via `maxRecordsPerFile` so a 1000-executor scan
   gets well-sized splits (small-file storms are the #1 large-table
   operational failure).
@@ -28,20 +24,6 @@ def write_partitioned_ticks(ticks: DataFrame, path: str,
      .partitionBy("event_date")
      .option("maxRecordsPerFile", max_records_per_file)
      .parquet(path))
-
-
-def write_bucketed_ticks(ticks: DataFrame, table: str, n_buckets: int = 64,
-                         path: str | None = None) -> None:
-    """Date-partitioned + key-bucketed managed table: co-locates each
-    instrument's ticks so candle agg and correlation prep shuffle-free."""
-    w = (ticks.withColumn("event_date", F.to_date("event_time"))
-         .write.mode("overwrite")
-         .partitionBy("event_date")
-         .bucketBy(n_buckets, "key")
-         .sortBy("key", "event_time"))
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
 
 
 def write_results(df: DataFrame, path: str, fmt: str = "parquet",

@@ -21,23 +21,13 @@ from data_timeseries_java_spark.streaming.asof_stream import (
     streaming_asof_join,
     streaming_asof_join_bucketed,
 )
-from data_timeseries_java_spark.streaming.corpus_stream import (
-    streaming_corpus_build,
-)
 from data_timeseries_java_spark.streaming.dsir_stream import (  # noqa: F401
     read_streaming_dsir,
     streaming_dsir_model,
 )
-from data_timeseries_java_spark.streaming.neardup_stream import (
-    streaming_neardup,
-)
 from data_timeseries_java_spark.streaming.sessions_stream import (
     sessionize,
     streaming_sessions,
-)
-from data_timeseries_java_spark.streaming.dedup_stream import (
-    streaming_dedup_content,
-    streaming_dedup_exact,
 )
 from data_timeseries_java_spark.streaming.ema_stream import (
     streaming_ema_applyinpandas,
@@ -73,9 +63,7 @@ from data_timeseries_java_spark.streaming.reorder import (
 __all__ = ["streaming_ohlc_candles", "streaming_complete_candles",
            "reordered_fold", "reordered_ema", "reordered_tick_bars",
            "reordered_scd2",
-           "sessionize", "streaming_sessions", "streaming_neardup",
-           "streaming_corpus_build", "streaming_anomalies",
-           "streaming_dedup_exact", "streaming_dedup_content",
+           "sessionize", "streaming_sessions", "streaming_anomalies",
            "streaming_ema_applyinpandas",
            "streaming_holt", "streaming_kalman", "streaming_garch",
            "streaming_macd",

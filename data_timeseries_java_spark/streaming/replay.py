@@ -162,27 +162,3 @@ def read_replay_sink(spark: SparkSession, out: str) -> DataFrame:
     write-side idempotency detail, not part of the result)."""
     return (spark.read.option("basePath", out).parquet(out)
             .drop("batch_id"))
-
-
-def keeper_route_file(n_files: int, lo: int, hi: int,
-                      text_col: str = "text",
-                      id_col: str = "doc_id"):
-    """Routing column for dedup-style replay gates: each content-hash
-    group's KEEPER (lowest id) must arrive no later than its members, or
-    the streaming store would crown a different keeper than batch.
-
-    keepers spread over the first n_files−1 buckets by id position;
-    `+ rank` pushes every non-keeper to a strictly later file (clamped —
-    two non-keepers sharing the last file is fine, both are dropped
-    against state regardless of order). Shared by the dedup and corpus
-    replay gates so the invariant lives in one place."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    rank = (F.row_number().over(
-        Window.partitionBy(F.md5(F.lower(F.col(text_col))))
-        .orderBy(id_col)) - 1)
-    id_bucket = F.floor((F.col(id_col) - F.lit(int(lo)))
-                        * (n_files - 1)
-                        / F.lit(max(int(hi) - int(lo) + 1, 1)))
-    return F.least(F.lit(n_files - 1), id_bucket + rank)

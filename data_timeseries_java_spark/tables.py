@@ -105,12 +105,6 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def events_as_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View the `events` table as an FX tick stream: key = event_type,
     bid = ask = value, all rows live. This is how the oracle-checked

@@ -34,20 +34,10 @@ FAMILIES = {
     "fx": ["fx"],
     "relational": ["relational", "tpch_hard"],
     "relational_ext": ["relational_ext"],
-    "dedup": ["dedup"],
     "text": ["text"],
-    "corpus": ["corpus"],
     "sketch": ["scale"],
     "multimodal": ["multimodal"],
 }
-
-# Lanes whose super-linear decade behavior is already root-caused and
-# documented (SCALE.md section named per lane). They are SKIPPED, not
-# timed: each is a deliberate exact/brute-force companion whose cost at
-# the 100x replica decade is quadratic by construction — re-measuring
-# them every audit would spend hours re-proving a documented design
-# decision. None is listed at present.
-DOCUMENTED: dict[str, str] = {}
 
 
 def lanes_by_family() -> dict[str, list[str]]:
@@ -88,10 +78,6 @@ def main() -> None:
         for name in names:
             if name not in qs:
                 continue
-            if name in DOCUMENTED:
-                print(f"{fam:15s} {name:28s}  skipped "
-                      f"[{DOCUMENTED[name]}]", flush=True)
-                continue
             if name in skip:
                 print(f"{fam:15s} {name:28s}  skipped [env]", flush=True)
                 continue
@@ -109,16 +95,13 @@ def main() -> None:
         print(f"-- {fam}: n={len(times)} median={med:.2f}s", flush=True)
         for name, t in sorted(times.items(), key=lambda kv: -kv[1]):
             if t >= 5 * med and t > 5.0:
-                tag = DOCUMENTED.get(name, "UNEXPLAINED")
                 flagged.append((fam, name, t, t / med))
                 print(f"** FLAG {fam}/{name}: {t:.1f}s = "
-                      f"{t / med:.1f}x family median [{tag}]", flush=True)
+                      f"{t / med:.1f}x family median", flush=True)
     print("\n=== flags ===")
     for fam, name, t, r in flagged:
-        tag = DOCUMENTED.get(name, "UNEXPLAINED")
-        print(f"{fam:15s} {name:28s} {t:8.1f}s {r:6.1f}x  {tag}")
-    n_unexplained = sum(1 for _, n, _, _ in flagged if n not in DOCUMENTED)
-    print(f"unexplained: {n_unexplained}")
+        print(f"{fam:15s} {name:28s} {t:8.1f}s {r:6.1f}x")
+    print(f"unexplained: {len(flagged)}")
 
 
 if __name__ == "__main__":

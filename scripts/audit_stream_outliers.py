@@ -54,14 +54,12 @@ FAMILIES: dict[str, list[str]] = {
     "fold": ["ema_state", "holt_state", "kalman_state", "garch_state",
              "macd_state", "vwap_state", "tick_bars_state", "scd2_state",
              "reordered_ema_state"],
-    # keyed dedup state (seen-key / seen-hash maps under a TTL)
-    "dedup": ["dedup_exact", "dedup_content", "neardup_fb"],
     # ordered per-key buffers with watermark trimming
     "asof": ["asof_join_state", "asof_join_wide_state",
              "asof_join_wide_bucketed"],
     # foreachBatch pipelines (batch plan per trigger + side state dir)
-    "pipeline_fb": ["anomalies_fb", "corpus_fb", "cms_topk_fb",
-                    "gridq_fb", "fx_pipeline_fb", "dsir_model_fb"],
+    "pipeline_fb": ["anomalies_fb", "cms_topk_fb", "gridq_fb",
+                    "fx_pipeline_fb", "dsir_model_fb"],
 }
 
 # Absolute floor: a lane under this median per-batch wall cannot flag
@@ -86,28 +84,6 @@ DOCUMENTED: dict[str, str] = {
     # (guard raised, IN-literal -> broadcast semi-join above 10k).
     "fx_pipeline_fb": "streaming-outlier-audit (cost ∝ touched windows; "
                       "replay trigger = 1/8 of history)",
-    # 3.3x its dedup-family median (r12: 3,051 ms vs 923): the family's
-    # other members are in-memory keyed hash-map gates; this lane is
-    # NEAR-dup — per trigger it builds 16-lane minhash signatures for
-    # the batch, re-scans the cumulative signature store, and runs the
-    # banded candidate + 16-lane agreement verify joins. Cost is the
-    # price of LSH-grade recall in a streaming gate, not a leak:
-    # late/early 1.05 measured while the store grew 8x across the run
-    # (scan parallelism absorbs it at this decade). Deployment posture
-    # for unbounded history: partition the store by band bucket and
-    # prune the per-trigger read to buckets the batch touches.
-    "neardup_fb": "streaming-outlier-audit round-13 (signature-store "
-                  "re-scan + banded verify = near-dup's inherent work)",
-    # 3.1x the pipeline_fb family median (r12: 2,975 ms vs 947): the
-    # family's other members are single-aggregate pipelines; this lane
-    # runs the full corpus build per trigger — watermarked content-hash
-    # dedup, quality + language columns, then k-gram decontamination of
-    # the batch against the static eval set (gram explode + join).
-    # Cost ∝ batch token volume with a fixed eval-gram side; flat
-    # across the run (late/early 0.79 — early batches carry the eval
-    # gram build). Inherent pipeline depth, not growth.
-    "corpus_fb": "streaming-outlier-audit round-13 (full corpus-build "
-                 "pipeline per trigger; decon join ∝ batch tokens)",
 }
 
 

@@ -13,13 +13,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-QUERIES = ["dedup_minhash_lsh", "corpus_build",
-           "fx_pair_correlation", "fx_corr_wide",
-           # round-6 additions: the new text/dedup operators' decades
-           "text_winnowing", "text_bigram_lm", "dedup_segments_cdc",
-           "fx_cusum",
+QUERIES = ["fx_pair_correlation", "fx_corr_wide",
+           # round-6 additions: the new text operators' decades
+           "text_winnowing", "text_bigram_lm", "fx_cusum",
            # round-7 batch 2 additions
-           "tfidf_neardup", "decontaminate_bloom", "quality_classifier",
+           "tfidf_neardup", "quality_classifier",
            # round-7 batch 3 additions (fact tables replicate from r8:
            # lineitem/orders grow with the decade, dims stay fixed)
            "fx_pair_spearman", "weighted_median_price",
@@ -27,7 +25,7 @@ QUERIES = ["dedup_minhash_lsh", "corpus_build",
            "brand_triangles",
            # round-8 additions
            "text_bpe_tokens_dict", "dsir_importance",
-           "dedup_substring_spans", "brand_triangles_deg",
+           "brand_triangles_deg",
            # round-8 session-2 additions: event-driven bars (per-key
            # total-order sort — the row_number shape under replica
            # growth), the gram-keyed source overlap join, and the two
@@ -43,12 +41,10 @@ QUERIES = ["dedup_minhash_lsh", "corpus_build",
            # the noise-robust vol estimator
            "value_psi", "value_ks_test", "fx_tsrv",
            "fx_backtest_donchian", "langid_confusion", "event_cuped",
-           # round-9 additions: chunk manifest (pure map — linear
-           # control), fertility (one scan + tiny agg), the cross-
-           # sectional rank backtest (per-window shuffle), index beta
-           # (materialized returns + two aggregates)
-           "doc_chunks", "tokenizer_fertility", "fx_momentum_ls",
-           "fx_index_beta",
+           # round-9 additions: fertility (one scan + tiny agg), the
+           # cross-sectional rank backtest (per-window shuffle), index
+           # beta (materialized returns + two aggregates)
+           "tokenizer_fertility", "fx_momentum_ls", "fx_index_beta",
            # round-9 batch 2: change-log SCD2 + snapshot diff (events
            # replicate), q18/q10 (lineitem/orders replicate), rank-sum
            # AUC (documents replicate), WOE/IV (dims fixed — flat
@@ -63,10 +59,7 @@ QUERIES = ["dedup_minhash_lsh", "corpus_build",
            # HOF-trap fixes (repetition/novelty) so their decades stay
            # measured post-fix
            "tpch_q21", "order_priority_check", "text_repetition",
-           "text_novelty",
-           # round 13: the hashed-shingle prefix-filter join — decades
-           # re-measured after the verify stream moved to int64 keys
-           "jaccard_prefix_join"]
+           "text_novelty"]
 
 
 def bench(spark, qs, name, sf_dir, n):

@@ -26,10 +26,6 @@ SHOWCASE = [
      "shuffle"),
     ("shipping_priority", "TPC-H q3 shape — segment-pruned broadcast dim, "
      "TakeOrdered top-N (never a full sort)"),
-    ("dedup_minhash_lsh", "MinHash banding — candidates only, no "
-     "all-pairs"),
-    ("corpus_build", "fused single-scan corpus signals (pinned <= 3 "
-     "scans)"),
     ("dq_expectations", "one conditional-sum aggregate scan per audited "
      "table + stack() unpivot"),
     ("text_bpe_tokens_dict", "1024-rank BPE via dictionary tokenization — "
@@ -51,8 +47,6 @@ SHOWCASE = [
     ("fx_backtest_donchian", "breakout backtest — three window passes "
      "on one key sort, moments from rounded decomposable sums (r9: + "
      "per-side costs on |Δposition|, turnover, net Sharpe)"),
-    ("doc_chunks", "RAG chunk manifest — ONE projection + one explode "
-     "of an integer sequence: zero exchanges, pure map over the scan"),
     ("fx_momentum_ls", "cross-sectional momentum long-short — per-key "
      "sort serves formation sum + lead; one candle-sized per-window "
      "rank shuffle; one aggregate"),

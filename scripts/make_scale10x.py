@@ -14,9 +14,9 @@ degenerate blow-up:
   zero while within-replica near-dup structure is untouched — the
   corpus dup RATE stays ~constant. (Naive 10x text duplication — or a
   word rotation, which preserves nearly all n-gram adjacencies —
-  multiplies LSH candidate pairs ~100x and measures a fabricated
-  problem: first measured that way, dedup came out 48x at 10x; with
-  constant dup rate it is ~linear.)
+  multiplies near-dup candidate pairs ~100x and measures a fabricated
+  problem: first measured that way, MinHash dedup came out 48x at 10x;
+  with constant dup rate it was ~linear.)
 - embeddings: 10 copies with a small deterministic per-replica
   perturbation (rotate vector components by i and add i*0.01) — keeps
   within-replica neighbor structure, decorrelates across replicas.
@@ -66,8 +66,8 @@ def main() -> None:
     # themselves other replicas' suffixes; Greek/Cyrillic case pairs
     # too), and the engine's tokenizer lowercases — so at REPS=1000
     # replica groups silently merged in shingle space (measured:
-    # max_df 25 -> 75, candidate pairs x16.5 instead of x10, and the
-    # jaccard_prefix_join verify stage exhausted the box's disk).
+    # max_df 25 -> 75, candidate pairs x16.5 instead of x10, and a
+    # shingle-join verify stage exhausted the box's disk).
     # Digits don't case-fold in any script. Round-13 (ADVICE r12):
     # replica 0 is suffixed too ('x0') — with replica 0 left as raw
     # source text, a source token that already ends in x<digits>

@@ -18,11 +18,6 @@ CORRECTNESS_r*.json:
 implementation hash differs from the stored one, and orders the gated
 remainder by stamp round ascending — the 50-lane driver sample rotates
 through changed lanes first, then the stalest greens.
-
-Bootstrap (no _gate.py yet): entries are stamped from the historical
-union with CURRENT hashes, except the lanes in BOOTSTRAP_UNGATE — the
-ones VERDICT r12 identified as rewritten after their last green driver
-row (stored hashes for those would be unverifiable).
 """
 
 from __future__ import annotations
@@ -38,14 +33,6 @@ sys.path.insert(0, ROOT)
 
 GATE_PATH = os.path.join(ROOT, "data_timeseries_java_spark", "queries",
                          "_gate.py")
-
-# Lanes rewritten after their last green driver row as of the r12→r13
-# bootstrap (VERDICT r12 "What's missing" #1). Only consulted when
-# _gate.py does not exist yet.
-BOOTSTRAP_UNGATE = {
-    "semantic_dedup", "semantic_dedup_ann", "semantic_dedup_fixedk",
-    "jaccard_prefix_join", "dedup_fuzzy",
-}
 
 
 def latest_checks() -> dict[str, tuple[int, bool]]:
@@ -74,8 +61,8 @@ def load_old_gate() -> dict[str, tuple[int, str]]:
 
 def merge(checks: dict[str, tuple[int, bool]],
           old: dict[str, tuple[int, str]],
-          queries: dict, oracles: dict[str, str],
-          bootstrap: bool = False) -> dict[str, tuple[int, str]]:
+          queries: dict,
+          oracles: dict[str, str]) -> dict[str, tuple[int, str]]:
     """The pure stamp logic: post-merge ledger from latest-wins checks
     plus the previous ledger. Phase-independent — callable on the live
     files at ANY point in the round lifecycle (tests assert invariants
@@ -89,8 +76,6 @@ def merge(checks: dict[str, tuple[int, bool]],
     for name, (rnd, green) in sorted(checks.items()):
         if not green or name not in queries:
             continue
-        if bootstrap and name in BOOTSTRAP_UNGATE:
-            continue
         if name in old and old[name][0] == rnd:
             gate[name] = old[name]
         elif rnd == max_round:
@@ -99,8 +84,7 @@ def merge(checks: dict[str, tuple[int, bool]],
             gate[name] = (rnd, impl_hash(queries[name],
                                          oracles.get(name, "")))
         # else: green long ago but absent from the ledger (deliberately
-        # un-gated — e.g. the r13 bootstrap's rewritten-after-green
-        # lanes). Stamping CURRENT hashes at an OLD round would launder
+        # un-gated). Stamping CURRENT hashes at an OLD round would launder
         # unverified code into "fresh"; stay ungated until the driver
         # re-greens it.
     return gate
@@ -130,10 +114,8 @@ def main() -> None:
 
     queries = _registry_queries()
     oracles = all_oracles()
-    bootstrap = not os.path.exists(GATE_PATH)
     old = load_old_gate()
-    gate = merge(latest_checks(), old, queries, oracles,
-                 bootstrap=bootstrap)
+    gate = merge(latest_checks(), old, queries, oracles)
 
     write_gate(gate)
 

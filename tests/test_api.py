@@ -61,30 +61,6 @@ def test_multimodal_decode_batch_shape(spark, sf_dir):
         assert abs(sum(r.feature) - 1.0) < 1e-6  # L1-normalized histogram
 
 
-def test_corpus_engine_matches_declared_queries(spark, sf_dir):
-    """CorpusEngine facade == the declared corpus queries on the same
-    documents frame."""
-    from pyspark.sql import functions as F
-
-    from data_timeseries_java_spark.api import CorpusEngine
-    from data_timeseries_java_spark.queries import all_queries
-    from data_timeseries_java_spark.queries.dedup import DECON_EVAL_MAX_ID
-    from data_timeseries_java_spark.tables import load_table
-
-    eng = CorpusEngine(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    eval_docs = docs.where(F.col("doc_id") < DECON_EVAL_MAX_ID)
-    pairs = [
-        (eng.build(docs, eval_docs), all_queries()["corpus_build"]),
-        (eng.splits(docs), all_queries()["leakage_safe_split"]),
-        (eng.packs(docs), all_queries()["sequence_packing"]),
-    ]
-    for got, query in pairs:
-        want = query(spark, sf_dir)
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, want.collect()))
-
-
 def test_media_engine_facade(spark):
     """MediaEngine facade routes each modality to its real codec and
     matches the declared media queries' operators on the same input."""
@@ -224,31 +200,3 @@ def test_series_engine_facade(spark, sf_dir):
     assert {"kf_level", "kf_gain", "kf_var"} <= set(k.columns)
     g = eng.garch(series)
     assert {"garch_var", "garch_vol"} <= set(g.columns) and g.count() == n
-
-
-def test_corpus_engine_funnel_and_select(spark, sf_dir):
-    """The round-8 facade methods: funnel emits the 4-stage attrition
-    chain consistent with build(); select returns exactly n_keep docs
-    ranked by the deterministic Gumbel key."""
-    from pyspark.sql import functions as F
-
-    from data_timeseries_java_spark.api import CorpusEngine
-    from data_timeseries_java_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    eng = CorpusEngine(spark)
-    funnel = {r.stage: r for r in
-              eng.funnel(docs, F.col("doc_id") < 50).collect()}
-    assert set(funnel) == {"quality", "language", "dedup_keeper",
-                           "decontamination"}
-    built = eng.build(docs.where(F.col("doc_id") >= 0),
-                      eval_docs=docs.where(F.col("doc_id") < 50)).count()
-    # eval_docs path anti-joins the eval ids out of candidates, while
-    # the funnel's predicate path keeps eval docs as candidates — both
-    # end at the same survivor count on this corpus only if no eval doc
-    # survives; assert the weaker invariant that holds by construction
-    assert funnel["decontamination"].n_out >= built
-    sel = eng.select(docs, F.col("lang") == "en", n_keep=25).collect()
-    assert len(sel) == 25
-    keys = [r.gumbel_key for r in sel]
-    assert keys == sorted(keys, reverse=True)

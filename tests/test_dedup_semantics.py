@@ -1,126 +1,9 @@
-"""Directed dedup semantics the synthetic corpus can't exercise:
-containment scoring must surface doc-in-doc pairs whose Jaccard falls
-below the near-dup threshold."""
+"""Directed semantics the synthetic corpus can't exercise: winnowing
+(MOSS) fingerprint guarantees, CUSUM change-point alarms, the hashed
+classifier's injected-weights seam and tf-idf cosine on identical
+docs."""
 
 from __future__ import annotations
-
-from data_timeseries_java_spark.operators.dedup import (
-    containment_dedup,
-    minhash_lsh_dedup,
-)
-
-# A is a strict prefix of B (doc-in-doc): containment = 1.0 but word-
-# bigram Jaccard ≈ 0.545 — under the 0.7 near-dup threshold. The pair
-# is chosen so the deterministic md5 LSH banding (16 hashes, band size
-# 4) actually collides on a band; MinHash banding recalls containment
-# pairs only with probability driven by Jaccard, so an arbitrary
-# embedded doc may not band-collide — that trade-off is documented on
-# the operator.
-_A = ("quebec victor november romeo hotel uniform whiskey four oscar "
-      "zulu xray alpha mike")
-_B = _A + " kilo two sierra lima echo charlie delta three one bravo"
-
-
-def _docs(spark):
-    return spark.createDataFrame(
-        [(1, _A), (2, _B), (3, "tango golf india papa tango golf")],
-        "doc_id long, text string")
-
-
-def test_containment_catches_doc_in_doc(spark):
-    out = containment_dedup(_docs(spark), k=2, threshold=0.8,
-                            cache_plan=False).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r.id_a, r.id_b) == (1, 2)
-    assert r.containment == 1.0
-    assert r.jaccard < 0.7        # Jaccard alone would have dropped it
-
-
-def test_jaccard_threshold_misses_the_same_pair(spark):
-    out = minhash_lsh_dedup(_docs(spark), k=2, threshold=0.7,
-                            cache_plan=False).collect()
-    assert out == []
-
-
-# ---- boundary-straddling exact-substring duplicates --------------------
-
-# A long duplicated region planted at offset 0 in doc 1 and offset 3 in
-# doc 2 (unique filler everywhere else). Fixed 8-token chunking misses
-# it: doc 2's chunks cover the region at a 3-token phase shift, so no
-# fixed chunk hash collides. Content-defined chunking cuts on the
-# TOKENS, so both copies chunk identically and their interior chunks
-# collide regardless of alignment.
-_REGION = ("november lima yankee sierra golf victor bravo charlie echo "
-           "delta papa quebec romeo uniform whiskey xray kilo oscar "
-           "mike hotel india juliett foxtrot tango alpha zulu")
-_PAD2 = "one two three"
-_FILL1 = "red green blue cyan magenta yellow umber teal navy coral"
-_FILL2 = "stone brick cedar maple birch aspen alder willow elm oak"
-
-
-def _straddle_docs(spark):
-    return spark.createDataFrame(
-        [(1, _REGION + " " + _FILL1),
-         (2, _PAD2 + " " + _REGION + " " + _FILL2)],
-        "doc_id long, text string")
-
-
-def test_fixed_chunking_misses_straddling_duplicate(spark):
-    from data_timeseries_java_spark.operators.dedup import (
-        segment_duplication,
-    )
-
-    out = {r.doc_id: r for r in
-           segment_duplication(_straddle_docs(spark), seg_len=8).collect()}
-    assert not out[1].has_dup_segment and not out[2].has_dup_segment
-
-
-def test_cdc_chunking_catches_straddling_duplicate(spark):
-    from data_timeseries_java_spark.operators.dedup import (
-        segment_duplication_cdc,
-    )
-
-    out = {r.doc_id: r for r in
-           segment_duplication_cdc(_straddle_docs(spark),
-                                   avg_seg_len=8).collect()}
-    # interior chunks of the shared region collide in BOTH docs even
-    # though the copies sit at different offsets
-    assert out[1].has_dup_segment and out[2].has_dup_segment
-    assert out[1].n_dup_segments >= 1 and out[2].n_dup_segments >= 1
-
-
-def test_cdc_chunking_no_false_positives(spark):
-    from data_timeseries_java_spark.operators.dedup import (
-        segment_duplication_cdc,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, _FILL1 + " " + _FILL1.upper().lower()[::-1]),
-         (2, _FILL2 + " stone brick")],
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           segment_duplication_cdc(docs, avg_seg_len=8).collect()}
-    assert all(not r.has_dup_segment for r in out.values())
-
-
-def test_cdc_short_docs_still_reported(spark):
-    """A doc whose every content-defined chunk is shorter than
-    min_seg_tokens must still get a row (0 segments, not duplicated) —
-    a keep-list join must distinguish 'not duplicated' from 'missing'."""
-    from data_timeseries_java_spark.operators.dedup import (
-        segment_duplication_cdc,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "tiny doc"),                                    # 2 tokens
-         (2, _FILL1 + " " + _FILL2)],                        # 20 tokens
-        "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           segment_duplication_cdc(docs, avg_seg_len=8).collect()}
-    assert set(out) == {1, 2}
-    assert out[1].n_segments == 0 and not out[1].has_dup_segment
-    assert out[1].dup_segment_frac == 0.0
 
 
 # ---- winnowing fingerprints (MOSS) -------------------------------------
@@ -189,52 +72,6 @@ def test_cusum_detects_mean_shift(spark):
     assert abs(out[-1].cusum_pos - 2.0) < 2e-6
 
 
-def test_bloom_flags_superset_of_exact_contamination(spark, sf_dir):
-    """Bloom membership has no false negatives: every doc the exact
-    n-gram check flags (>= overlap shared grams) must also be flagged by
-    the Bloom variant, and its flagged-gram count can only be higher
-    (false positives add, never subtract)."""
-    from pyspark.sql import functions as F
-
-    from data_timeseries_java_spark.operators.dedup import (
-        bloom_decontaminate, ngram_contamination)
-    from data_timeseries_java_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.where(F.col("doc_id") >= 50)
-    ev = docs.where(F.col("doc_id") < 50)
-    exact = {r.doc_id: r.n_shared_ngrams
-             for r in ngram_contamination(corpus, ev, k=5,
-                                          min_overlap=3).collect()}
-    bloom = {r.doc_id: r.n_flagged_ngrams
-             for r in bloom_decontaminate(corpus, ev, k=5,
-                                          min_overlap=3).collect()}
-    assert exact, "fixture should contain contaminated docs"
-    for doc, n in exact.items():
-        assert doc in bloom and bloom[doc] >= n
-
-
-def test_bloom_self_filter_flags_every_gram(spark, sf_dir):
-    """Probing the filter with the exact gram set that built it must hit
-    on EVERY gram (exercises all bit positions incl. the sign bit —
-    regression for the %2-on-negative-long probe bug)."""
-    from pyspark.sql import functions as F
-
-    from data_timeseries_java_spark.operators.dedup import (
-        bloom_decontaminate, shingles)
-    from data_timeseries_java_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 80)
-    flagged = {r.doc_id: r.n_flagged_ngrams
-               for r in bloom_decontaminate(docs, docs, k=5,
-                                            min_overlap=1).collect()}
-    grams = {r[0]: r[1] for r in
-             (shingles(docs, "text", "doc_id", 5)
-              .groupBy("doc_id").count().collect())}
-    for doc, n_grams in grams.items():
-        assert flagged.get(doc) == n_grams, doc
-
-
 def test_hashed_classifier_with_injected_weights(spark):
     """The trained-weights seam: a caller-supplied (bucket, w) table is
     applied exactly — two docs with the same bag of words score
@@ -276,59 +113,3 @@ def test_tfidf_cosine_identical_docs_hit_one(spark):
     assert set(pairs) == {(1, 2)}
     assert abs(pairs[(1, 2)].cosine - 1.0) < 1e-9
     assert pairs[(1, 2)].n_shared_terms == 4
-
-
-def test_prefix_join_no_false_negatives(spark, sf_dir):
-    """The prefix-filter guarantee: every pair brute-force Jaccard says
-    is >= t must come back from jaccard_prefix_join (and nothing below
-    t may appear)."""
-    from pyspark.sql import functions as F
-
-    from data_timeseries_java_spark.operators.dedup import (
-        jaccard_prefix_join, shingles)
-    from data_timeseries_java_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    t = 0.5
-    got = {(r.id_a, r.id_b): r.jaccard
-           for r in jaccard_prefix_join(docs, threshold=t, k=3).collect()}
-    sets = {}
-    for r in shingles(docs, "text", "doc_id", 3).collect():
-        sets.setdefault(r.doc_id, set()).add(r.shingle)
-    ids = sorted(sets)
-    expected = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            inter = len(sets[a] & sets[b])
-            if inter:
-                j = inter / (len(sets[a]) + len(sets[b]) - inter)
-                if round(j, 9) >= t:
-                    expected[(a, b)] = j
-    assert set(got) == set(expected)
-    for k_, v in expected.items():
-        assert abs(got[k_] - v) < 1e-6
-    assert expected, "fixture should contain trigram near-dup pairs"
-
-
-def test_prefix_join_bucketed_verify_matches_single_plan(spark, sf_dir,
-                                                         tmp_path):
-    """verify_buckets > 1 (round-14, VERDICT r13 #3) partitions the
-    candidate set into disjoint xxhash64(id_b) buckets and verifies
-    them as sequential actions — the RESULT must equal the single-plan
-    verify row for row (same pairs, same exact Jaccard values)."""
-    from data_timeseries_java_spark.operators.dedup import (
-        jaccard_prefix_join)
-    from data_timeseries_java_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    one = (jaccard_prefix_join(docs, threshold=0.5, k=3)
-           .toPandas().sort_values(["id_a", "id_b"])
-           .reset_index(drop=True))
-    many = (jaccard_prefix_join(docs, threshold=0.5, k=3,
-                                verify_buckets=5,
-                                work_dir=str(tmp_path / "jb"))
-            .toPandas().sort_values(["id_a", "id_b"])
-            .reset_index(drop=True))
-    assert len(one) == len(many) > 0
-    for c in one.columns:
-        assert (one[c] == many[c]).all(), f"bucketed verify diverges on {c}"

@@ -92,11 +92,10 @@ def test_readme_quickstart_examples_run(spark):
     text = open(path).read()
     section = text.split("## Quickstart", 1)[1].split("\n## ", 1)[0]
     blocks = re.findall(r"```python\n(.*?)```", section, flags=re.S)
-    assert len(blocks) == 4, "expected one example per facade"
+    assert len(blocks) == 3, "expected one example per facade"
     ns: dict = {}
     for block in blocks:
         exec(compile(block, "README.md", "exec"), ns)  # noqa: S102
     # the examples' own spark is the shared test session (getOrCreate)
-    for var in ("corr", "kept", "splits", "packs", "report", "chosen",
-                "meta", "stats", "resized"):
+    for var in ("corr", "meta", "stats", "resized"):
         assert ns[var].count() > 0, f"README example frame {var} is empty"

@@ -53,17 +53,18 @@ def test_noop_policy_produces_identical_rows(spark, sf_dir):
     assert len(uncached) > 0
 
 
-def test_tracking_policy_releases_every_subtree(spark, sf_dir):
-    """The service-caller shape: run a query under a TrackingPolicy,
+def test_tracking_policy_releases_every_subtree(spark):
+    """The service-caller shape: run a pipeline under a TrackingPolicy,
     then unpersist_all() returns the session to a cache-free state."""
-    from data_timeseries_java_spark.queries import all_queries
+    from data_timeseries_java_spark.api import FXEngine
+    from data_timeseries_java_spark.fixtures import demo_ticks
 
     spark.catalog.clearCache()
-    q = all_queries()["dedup_minhash_lsh"]
     with materialization(TrackingPolicy()) as tracked:
-        n_rows = q(spark, sf_dir).count()
+        n_rows = FXEngine(spark).run(demo_ticks(spark)).count()
     assert n_rows > 0
-    assert len(tracked.frames) >= 1  # minhash per-doc frame was routed
+    # pairwise_correlations' windowed-returns input was routed
+    assert len(tracked.frames) >= 1
     assert all(f.storageLevel.useMemory for f in tracked.frames)
     released = tracked.unpersist_all()
     assert released >= 1

@@ -189,19 +189,16 @@ def test_no_query_falls_into_row_python(spark, sf_dir):
             "growing (unboundedPreceding, -1) frame instead")
 
 
-# Queries whose *algorithm* is iterative (convergence-checked label
-# propagation) — building them necessarily runs distributed jobs; the
-# driver only coordinates the loop. Everything else must be a pure plan.
-# fx_candles_stream_replay EXECUTES a streaming query at build time by
-# design (its declared result is the materialized stream sink) — the
-# one entry that gates the streaming lane through the driver's oracle.
-_ITERATIVE_QUERIES = {"dedup_clusters", "dedup_keep_list",
-                      "fx_candles_stream_replay", "asof_stream_replay",
+# Queries that run distributed jobs while their plan is built: each
+# stream replay EXECUTES a streaming query at build time by design (its
+# declared result is the materialized stream sink) — the entries that
+# gate the streaming lanes through the driver's oracle. Everything else
+# must be a pure plan.
+_ITERATIVE_QUERIES = {"fx_candles_stream_replay", "asof_stream_replay",
                       "topk_stream_replay", "hll_stream_replay",
-                      "neardup_stream_replay", "corpus_stream_replay",
                       "fx_corr_stream_replay", "sessions_stream_replay",
-                      "vol_stream_replay", "dedup_stream_replay",
-                      "ema_stream_replay", "anomaly_stream_replay",
+                      "vol_stream_replay", "ema_stream_replay",
+                      "anomaly_stream_replay",
                       "recovery_stream_replay", "holt_stream_replay",
                       "garch_stream_replay", "drawdown_stream_replay",
                       "kalman_stream_replay", "gridq_stream_replay",
@@ -320,16 +317,6 @@ def test_bucketed_returns_eliminate_pair_join_shuffle(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS _test_returns_bucketed")
-
-
-def test_corpus_build_stays_fused(spark, sf_dir):
-    """The corpus pipeline must keep its fused shape: at most 3 parquet
-    scans (main projection + the two contamination shingle sides), no
-    doc-count joins re-introduced, window-min keeper intact."""
-    q = all_queries()["corpus_build"](spark, sf_dir)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") <= 3, "corpus_build lost its fusion"
-    assert "CartesianProduct" not in plan
 
 
 def test_corr_dispatcher_kernel_by_universe_size(spark, sf_dir):
@@ -460,16 +447,15 @@ def test_round7_additions_plan_shapes(spark, sf_dir):
     (same 4-exchange budget as text_bpe_tokens_dict — explode-count,
     vocab distinct, per-doc aggregate, join back; the pre-r14
     zero-exchange doc-level chain paid O(merges x corpus_chars)
-    execution instead, measured 4.5x slower at sf0.1); BPE packing
-    keeps the single per-shard window shuffle; the hurst explode stays
-    within the candle pipeline's budget + its two aggregations."""
+    execution instead, measured 4.5x slower at sf0.1); the hurst
+    explode stays within the candle pipeline's budget + its two
+    aggregations."""
     # earlier tests in a shared session may leave cached subtrees
     # (queries using plans/materialize) that substitute into these
     # plans and shift exchange counts — measure the clean plans
     spark.catalog.clearCache()
     qs = all_queries()
     for name, budget in [("text_bpe_tokens", 4),
-                         ("sequence_packing_bpe", 1),
                          ("fx_hurst", 5),
                          ("fx_holt_trend", 5), ("fx_kalman_level", 5),
                          ("fx_garch_vol", 5), ("fx_half_life", 5),
@@ -485,22 +471,11 @@ def test_round8_additions_plan_shapes(spark, sf_dir):
     """Scale-shape pins for the round-8 operators: DSIR is two
     aggregates over one gram explode plus a broadcast model (a shuffle
     creeping past 5 means a join stopped broadcasting); the resample
-    adds ONLY a TakeOrdered (same budget, no extra exchange); substring
-    spans are two keyed shuffles (gram-hash agg, dup-position window —
-    gram assembly went per-row in r15); the funnel is the corpus_build
-    flags shape plus one global aggregate."""
+    adds ONLY a TakeOrdered (same budget, no extra exchange)."""
     spark.catalog.clearCache()
     qs = all_queries()
     for name, budget in [("dsir_importance", 5), ("dsir_resample", 5),
-                         # r15: gram assembly is per-row (staged slices
-                         # + arrays_zip) — only the gram-hash window
-                         # and the dup-position window shuffle
-                         ("dedup_substring_spans", 2),
-                         ("corpus_funnel", 4),
-                         ("text_bpe_tokens_dict", 4),
-                         # RAG chunking is a pure map: ANY exchange
-                         # would mean the generator plan regressed
-                         ("doc_chunks", 0)]:
+                         ("text_bpe_tokens_dict", 4)]:
         q = qs[name](spark, sf_dir)
         n = exchange_count(q)
         assert n <= budget, (
@@ -606,12 +581,10 @@ def test_hof_traps_stay_fixed(spark, sf_dir):
 
 
 # The frozen scale-path roster (round-12 VERDICT #4): every declared
-# query is adjudicated either scale-path (listed here) or
-# declared-baseline (classification.DECLARED_BASELINES, with pointers
-# to the scale path a production user should reach instead). Adding a
-# query without touching one of the two lists fails
-# test_every_lane_is_classified — an unadjudicated default-sounding
-# name routing to a quadratic is the round-11 semantic_dedup lesson.
+# query is adjudicated scale-path by being listed here. Adding a query
+# without touching this list fails test_every_lane_is_classified — an
+# unadjudicated default-sounding name routing to a quadratic is the
+# round-11 semantic_dedup lesson.
 _SCALE_PATH = {
     "above_segment_avg", "allowed_lateness_stream_replay",
     "anomaly_stream_replay", "approx_distinct_users", "approx_topk_cms",
@@ -620,86 +593,70 @@ _SCALE_PATH = {
     "benford_order_totals", "bm25_search", "brand_pagerank",
     "brand_supplier_counts", "brand_triangles", "brand_triangles_deg",
     "classifier_auc", "classifier_calibration", "cohort_ltv",
-    "cohort_retention", "corpus_build", "corpus_funnel",
-    "corpus_stream_replay", "cross_source_dup",
-    "customer_order_distribution", "customer_rfm", "customer_set_ops",
-    "customer_spend_quartiles", "customers_without_orders",
-    "dataset_split", "decontaminate", "decontaminate_bloom",
-    "decontaminate_winnow", "dedup_clusters", "dedup_containment",
-    "dedup_exact", "dedup_family_histogram", "dedup_fuzzy",
-    "dedup_keep_list", "dedup_minhash_lsh", "dedup_segments",
-    "dedup_segments_cdc", "dedup_simhash", "dedup_stream_replay",
-    "dedup_substring_spans", "disjunctive_revenue",
-    "distinct_suppliers", "distinct_users_by_type", "doc_chunks",
-    "dominant_part_suppliers", "dq_expectations",
-    "drawdown_stream_replay", "dsir_importance", "dsir_quantile_select",
-    "dsir_resample", "dsir_stream_replay", "ema_ooo_stream_replay",
-    "ema_stream_replay", "event_ab_test", "event_anomalies",
-    "event_cuped", "event_decay_score", "event_gap_stats",
-    "event_hour_profile", "event_mad_outliers", "event_transitions",
-    "event_winsorize", "events_json_props", "events_k_anonymity",
-    "feature_woe_iv", "forecast_revenue", "funnel_conversion",
-    "funnel_ooo_stream_replay", "funnel_stream_replay",
+    "cohort_retention", "cross_source_dup", "customer_order_distribution",
+    "customer_rfm", "customer_set_ops", "customer_spend_quartiles",
+    "customers_without_orders", "dataset_split", "decontaminate_winnow",
+    "disjunctive_revenue", "distinct_suppliers", "distinct_users_by_type",
+    "dominant_part_suppliers", "dq_expectations", "drawdown_stream_replay",
+    "dsir_importance", "dsir_quantile_select", "dsir_resample",
+    "dsir_stream_replay", "ema_ooo_stream_replay", "ema_stream_replay",
+    "event_ab_test", "event_anomalies", "event_cuped", "event_decay_score",
+    "event_gap_stats", "event_hour_profile", "event_mad_outliers",
+    "event_transitions", "event_winsorize", "events_json_props",
+    "events_k_anonymity", "feature_woe_iv", "forecast_revenue",
+    "funnel_conversion", "funnel_ooo_stream_replay", "funnel_stream_replay",
     "funnel_time_to_convert", "fx_align_series", "fx_amihud", "fx_atr",
     "fx_autocorr", "fx_backtest_donchian", "fx_bollinger",
     "fx_candle_patterns", "fx_candles_bidask", "fx_candles_complete",
     "fx_candles_interpolated", "fx_candles_ohlc", "fx_candles_rollup",
     "fx_candles_stream_replay", "fx_cointegration", "fx_corr_headline",
     "fx_corr_stream_replay", "fx_corr_threshold", "fx_corr_underlying",
-    "fx_corr_user_buckets", "fx_corr_wide", "fx_cross_rate",
-    "fx_cross_zscore", "fx_cusum", "fx_dollar_bars", "fx_donchian",
-    "fx_drawdown", "fx_ema_returns", "fx_ewma_cov", "fx_gapfill_rows",
-    "fx_garch_vol", "fx_half_life", "fx_holt_trend",
-    "fx_hourly_seasonality", "fx_hurst", "fx_imbalance_bars",
-    "fx_index_beta", "fx_kalman_level", "fx_kyle_lambda", "fx_lead_lag",
-    "fx_log_returns", "fx_macd", "fx_mean_correlation",
-    "fx_momentum_ls", "fx_obv", "fx_ohlc_vol_estimators",
-    "fx_pair_beta", "fx_pair_correlation", "fx_pair_correlation_auto",
-    "fx_pair_spearman", "fx_parkinson_vol", "fx_realized_vol",
-    "fx_roll_spread", "fx_rsi", "fx_sliding_returns", "fx_spread_stats",
-    "fx_stochastic", "fx_tick_bars", "fx_tick_rule", "fx_tsrv",
-    "fx_twap", "fx_var_es", "fx_variance_ratio", "fx_vol_regimes",
-    "fx_volume_curve", "fx_volume_profile", "fx_vpin", "fx_vwap",
-    "fx_workpacket_stats", "garch_stream_replay", "gopher_rules",
+    "fx_corr_user_buckets", "fx_corr_wide", "fx_cross_rate", "fx_cross_zscore",
+    "fx_cusum", "fx_dollar_bars", "fx_donchian", "fx_drawdown",
+    "fx_ema_returns", "fx_ewma_cov", "fx_gapfill_rows", "fx_garch_vol",
+    "fx_half_life", "fx_holt_trend", "fx_hourly_seasonality", "fx_hurst",
+    "fx_imbalance_bars", "fx_index_beta", "fx_kalman_level", "fx_kyle_lambda",
+    "fx_lead_lag", "fx_log_returns", "fx_macd", "fx_mean_correlation",
+    "fx_momentum_ls", "fx_obv", "fx_ohlc_vol_estimators", "fx_pair_beta",
+    "fx_pair_correlation", "fx_pair_correlation_auto", "fx_pair_spearman",
+    "fx_parkinson_vol", "fx_realized_vol", "fx_roll_spread", "fx_rsi",
+    "fx_sliding_returns", "fx_spread_stats", "fx_stochastic", "fx_tick_bars",
+    "fx_tick_rule", "fx_tsrv", "fx_twap", "fx_var_es", "fx_variance_ratio",
+    "fx_vol_regimes", "fx_volume_curve", "fx_volume_profile", "fx_vpin",
+    "fx_vwap", "fx_workpacket_stats", "garch_stream_replay", "gopher_rules",
     "gridq_stream_replay", "hll_pair_intersection", "hll_stream_replay",
     "hll_user_rollup", "holt_ooo_stream_replay", "holt_stream_replay",
     "imbalance_bars_stream_replay", "imbalance_ooo_stream_replay",
-    "jaccard_prefix_join", "kalman_stream_replay", "langid_confusion",
-    "large_volume_customers", "late_data_state_stream_replay",
-    "late_data_stream_replay", "leakage_safe_split",
-    "lineitem_grouping_sets", "macd_stream_replay",
-    "market_basket_pairs", "media_cross_format_dedup",
-    "media_decode_features", "media_jpeg_decode", "media_jpeg_header",
-    "media_metadata", "media_png_decode", "media_resize",
+    "kalman_stream_replay", "langid_confusion", "large_volume_customers",
+    "late_data_state_stream_replay", "late_data_stream_replay",
+    "lineitem_grouping_sets", "macd_stream_replay", "market_basket_pairs",
+    "media_cross_format_dedup", "media_decode_features", "media_jpeg_decode",
+    "media_jpeg_header", "media_metadata", "media_png_decode", "media_resize",
     "media_video_frames", "media_wav_features", "media_wav_resample",
     "media_wav_spectrum", "merge_corrections", "min_cost_supplier",
-    "mixture_sample", "mixture_token_budget", "monthly_order_stats",
-    "monthly_revenue_complete", "moving_avg_range", "moving_median",
-    "nation_customer_list", "nation_market_share", "nation_outer_join",
-    "nation_profit", "neardup_stream_replay", "neardup_threshold_sweep",
+    "monthly_order_stats", "monthly_revenue_complete", "moving_avg_range",
+    "moving_median", "nation_customer_list", "nation_market_share",
+    "nation_outer_join", "nation_profit", "neardup_threshold_sweep",
     "order_priority_check", "order_ranks", "order_ship_latency",
     "orders_flag_filter", "orders_with_expensive_items",
-    "packing_efficiency", "part_abc_classification",
-    "part_scalar_functions", "part_supplier_hhi", "pii_scan",
-    "price_quantiles", "pricing_summary", "priority_pivot",
+    "part_abc_classification", "part_scalar_functions", "part_supplier_hhi",
+    "pii_scan", "price_quantiles", "pricing_summary", "priority_pivot",
     "priority_rollup", "profile_lineitem", "promo_revenue",
-    "psi_stream_replay", "quality_classifier",
-    "range_join_event_candle", "recovery_stream_replay",
-    "region_nation_share", "reorder_recovery_stream_replay",
-    "returned_item_report", "revenue_by_nation", "revenue_gini",
-    "revenue_pareto", "rich_idle_customers", "rolling_distinct_users",
-    "salted_event_stats", "scd2_history", "scd2_stream_replay",
-    "scd2_user_status", "seasonal_profile", "sequence_packing",
-    "sequence_packing_bpe", "sessions_stream_replay",
-    "ship_lag_quantiles", "shipping_priority", "small_quantity_revenue",
-    "snapshot_diff", "source_keyness", "source_lang_kl",
-    "source_ngram_overlap", "source_token_stats", "status_cube",
-    "stratified_sample", "stream_join_replay", "supplier_share",
-    "text_bigram_lm", "text_bpe_tokens", "text_bpe_tokens_dict",
-    "text_burstiness", "text_collocations", "text_entropy",
-    "text_fingerprint", "text_langid", "text_novelty", "text_quality",
-    "text_readability", "text_repetition", "text_tokens",
-    "text_winnowing", "tfidf_neardup", "tfidf_top_terms",
+    "psi_stream_replay", "quality_classifier", "range_join_event_candle",
+    "recovery_stream_replay", "region_nation_share",
+    "reorder_recovery_stream_replay", "returned_item_report",
+    "revenue_by_nation", "revenue_gini", "revenue_pareto",
+    "rich_idle_customers", "rolling_distinct_users", "salted_event_stats",
+    "scd2_history", "scd2_stream_replay", "scd2_user_status",
+    "seasonal_profile", "sessions_stream_replay", "ship_lag_quantiles",
+    "shipping_priority", "small_quantity_revenue", "snapshot_diff",
+    "source_keyness", "source_lang_kl", "source_ngram_overlap",
+    "source_token_stats", "status_cube", "stratified_sample",
+    "stream_join_replay", "supplier_share", "text_bigram_lm",
+    "text_bpe_tokens", "text_bpe_tokens_dict", "text_burstiness",
+    "text_collocations", "text_entropy", "text_fingerprint", "text_langid",
+    "text_novelty", "text_quality", "text_readability", "text_repetition",
+    "text_tokens", "text_winnowing", "tfidf_neardup", "tfidf_top_terms",
     "tick_bars_stream_replay", "tokenizer_fertility", "top_customers",
     "top_revenue_supplier", "topk_stream_replay", "tpch_q21",
     "user_behavior_entropy", "user_event_entropy", "user_sessions",
@@ -712,51 +669,11 @@ _SCALE_PATH = {
 
 
 def test_every_lane_is_classified():
-    """Totality + disjointness of the scale classification: the live
-    registry must equal _SCALE_PATH ∪ DECLARED_BASELINES exactly."""
-    from data_timeseries_java_spark.queries.classification import (
-        DECLARED_BASELINES)
-
+    """Totality of the scale classification: the live registry must
+    equal _SCALE_PATH exactly."""
     declared = set(all_queries())
-    baselines = set(DECLARED_BASELINES)
-    assert not (_SCALE_PATH & baselines), (
-        "a lane cannot be both scale-path and declared-baseline: "
-        f"{sorted(_SCALE_PATH & baselines)}")
-    missing = declared - _SCALE_PATH - baselines
+    missing = declared - _SCALE_PATH
     assert not missing, (
-        f"unadjudicated queries (add to _SCALE_PATH or "
-        f"DECLARED_BASELINES with a scale-path pointer): "
-        f"{sorted(missing)}")
-    stale = (_SCALE_PATH | baselines) - declared
+        f"unadjudicated queries (add to _SCALE_PATH): {sorted(missing)}")
+    stale = _SCALE_PATH - declared
     assert not stale, f"classified but not declared: {sorted(stale)}"
-
-
-def test_baseline_pointers_resolve_to_scale_paths():
-    """Every declared baseline must point at >=1 declared query that is
-    itself scale-path — the user always has a named way out."""
-    from data_timeseries_java_spark.queries.classification import (
-        DECLARED_BASELINES)
-
-    declared = set(all_queries())
-    for name, (why, pointers) in DECLARED_BASELINES.items():
-        assert why and pointers, f"{name}: empty adjudication"
-        for p in pointers:
-            assert p in declared, f"{name} points at undeclared {p}"
-            assert p not in DECLARED_BASELINES, (
-                f"{name} points at {p}, itself a baseline")
-
-
-def test_audit_documented_lanes_are_declared_baselines():
-    """Cross-consistency: every lane the 100x outlier audit skips as
-    documented-quadratic must be a DECLARED_BASELINE here — one
-    adjudication, three artifacts (classification, audit, SCALE.md)."""
-    import importlib
-
-    from data_timeseries_java_spark.queries.classification import (
-        DECLARED_BASELINES)
-
-    audit = importlib.import_module("scripts.audit_outliers")
-    undeclared = set(audit.DOCUMENTED) - set(DECLARED_BASELINES)
-    assert not undeclared, (
-        f"audit-skipped lanes missing a baseline adjudication: "
-        f"{sorted(undeclared)}")
